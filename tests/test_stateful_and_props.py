@@ -57,6 +57,47 @@ def test_stateful_user_activity_matches_batch(spark, tmp_path):
     assert got.equals(want), (got.head(), want.head())
 
 
+def test_drain_reraises_a_dead_stateful_stream(spark, tmp_path):
+    """A stateful function that raises kills its query; draining that
+    query must surface the stream's error, not return as if the stream
+    had drained (which would hand the caller an empty or partial sink)."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful import (
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+    )
+    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
+        drain_finite_stateful_stream,
+        events_stream,
+        replay_dir,
+    )
+
+    def planted_failure(key, batches, state):
+        raise ValueError("planted stateful failure")
+        yield  # a generator, like every applyInPandasWithState function
+
+    chunks = replay_dir(spark, SF_SMOKE, str(tmp_path / "replay"), 2)
+    stream = events_stream(spark, chunks).groupBy("user_id").applyInPandasWithState(
+        planted_failure,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("planted_failure")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="planted stateful failure"):
+        drain_finite_stateful_stream(q, timeout_s=120)
+    assert not q.isActive
+
+
 # --------------------------------------------------------------------------
 # text-line scan parity (the reference's native input model)
 
@@ -230,173 +271,6 @@ def test_sql_frontend_filter_roundtrip(ds, regex):
     q = parse_maplejuice_sql(f"SELECT ALL FROM {ds} WHERE {regex.strip() or 'x'}")
     assert q.kind == "filter" and q.dataset == ds
     assert q.regex == (regex.strip() or "x")
-
-
-def _protobuf_available() -> bool:
-    # transformWithState's state-server protocol is protobuf-encoded;
-    # PySpark's TWS driver worker dies at import without it (verified:
-    # "cannot import name 'descriptor' from 'google.protobuf'").  The
-    # container ships no protobuf and installs are out of scope, so the
-    # v2 test runs wherever the dependency exists and skips here.
-    #
-    # Vendoring was attempted and is impossible here (VERDICT r4 task
-    # 4): the container has no network — `pip download protobuf
-    # --no-deps` fails with "Failed to establish a new connection:
-    # [Errno -2] Name or service not known" for every retry against
-    # the configured index, ending in "ERROR: No matching distribution
-    # found for protobuf" (2026-08-14); no protobuf wheel or
-    # site-packages copy exists anywhere on disk (`find / -name
-    # '*protobuf*'` surfaces only pyspark's generated _pb2 stubs and
-    # typeshed stubs).  A hand-written google.protobuf stand-in is not
-    # viable either: pyspark's generated state_message_pb2 needs the
-    # real descriptor-pool/message-factory runtime, not an interface
-    # shim.  The processor LOGIC is covered protobuf-free by
-    # test_tws_processor_logic_with_stubbed_handle below.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState needs google.protobuf (not shipped in this container)",
-)
-def test_stateful_v2_user_activity_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas (v2 arbitrary state) reproduces the
-    batch per-user totals, like the v1 test above."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful_v2 import (
-        ensure_rocksdb_state_store,
-        user_activity_stream_v2,
-    )
-    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
-        events_stream,
-        replay_dir,
-    )
-
-    chunks = replay_dir(spark, SF_SMOKE, str(tmp_path / "replay2"), 4)
-    stream = user_activity_stream_v2(events_stream(spark, chunks))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    ensure_rocksdb_state_store(spark)
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("useract2")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(300), "TWS query did not drain in time"
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = (
-        spark.table("useract2")
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .toPandas()
-        .sort_values("user_id")
-        .reset_index(drop=True)
-    )
-    assert got.equals(want), (got.head(), want.head())
-
-
-def test_tws_processor_logic_with_stubbed_handle(spark):
-    """Protobuf-free unit test of UserTotalsProcessor (ADVICE r3): the
-    container can't run a real transformWithStateInPandas query (no
-    protobuf -> the stream==batch test above skips), so exercise the
-    processor's lifecycle against a stub handle implementing the
-    ValueState interface — verifying the tuple unpack in
-    handleInputRows, the accumulate-across-chunks logic, the state
-    schema DDL strings, and the output frame's conformance to
-    OUTPUT_SCHEMA."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful_v2 import (
-        OUTPUT_SCHEMA,
-        STATE_TTL_MS,
-        UserTotalsProcessor,
-    )
-
-    class StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            # the real API takes a tuple matching the declared schema
-            assert isinstance(v, tuple), type(v)
-            self._v = v
-
-    class StubHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            # the schema string must be valid Spark DDL
-            st = StructType.fromDDL(schema)
-            self.states[name] = (st, ttlDurationMs)
-            s = StubValueState()
-            s.schema = st
-            return s
-
-    handle = StubHandle()
-    proc = UserTotalsProcessor()
-    proc.init(handle)
-
-    # state declaration: name, 2-field (long, double) schema, TTL set
-    assert "totals" in handle.states
-    decl, ttl = handle.states["totals"]
-    assert [f.name for f in decl.fields] == ["n", "s"]
-    assert ttl == STATE_TTL_MS
-
-    # first batch, two Arrow chunks for one key
-    out1 = list(
-        proc.handleInputRows(
-            (7,),
-            iter([pd.DataFrame({"value": [1.0, 2.0]}),
-                  pd.DataFrame({"value": [3.5]})]),
-            None,
-        )
-    )
-    # second batch: state must carry over (exists() -> get() unpack)
-    out2 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"value": [0.5]})]), None)
-    )
-    proc.close()
-
-    expected_cols = [f.name for f in StructType.fromDDL(OUTPUT_SCHEMA).fields]
-    for out, (n, s) in [(out1, (3, 6.5)), (out2, (4, 7.0))]:
-        assert len(out) == 1
-        pdf = out[0]
-        assert list(pdf.columns) == expected_cols
-        assert pdf["user_id"].tolist() == [7]
-        assert pdf["n_events"].tolist() == [n]
-        assert pdf["sum_value"].tolist() == [s]
-
-    # declared state schema arity matches what update() stored
-    assert len(handle.states["totals"][0].fields) == 2
 
 
 @given(
