@@ -24,16 +24,20 @@ Mapping (Spark-first, not a port):
   storage layer's job (HDFS/S3 on a real deployment) — here a local
   directory stands in, exactly as SURVEY §2.1 scopes it.
 - **maple** [spec: A1] runs an ARBITRARY executable over the dataset's
-  lines via ``rdd.pipe`` (true process boundary, stdin/stdout,
-  ``key\\tvalue`` framing) across ``num_maples`` tasks and persists
-  the intermediate pairs as a text dataset named by the prefix — the
-  reference's SDFS intermediates, minus the one-file-per-key layout
-  (per-key files ARE a shuffle materialization; Spark's shuffle does
-  that job at juice time, spill-aware).
+  lines (true process boundary, stdin/stdout, ``key\\tvalue``
+  framing) across ``num_maples`` tasks and persists the intermediate
+  pairs as a text dataset named by the prefix — the reference's SDFS
+  intermediates, minus the one-file-per-key layout (per-key files ARE
+  a shuffle materialization; Spark's shuffle does that job at juice
+  time, spill-aware).  The executable runs under Spark SQL's script
+  transformation (``operators/maplejuice.maple_pipe``): the JVM reads
+  the dataset, feeds the process and writes its output, with no
+  Python worker in the path.
 - **juice** [spec: A2] re-reads the prefix dataset, shuffles by key
-  with the hash [A3] or range [A4] partitioner (sorted reducer input,
-  Hadoop-streaming contract), pipes each task's stream through the
-  juice executable, writes the dest dataset; ``delete_input=1``
+  with the hash [A3] or range [A4] partitioner and sorts each task's
+  pairs by key in the JVM (sorted reducer input, Hadoop-streaming
+  contract), pipes each task's stream through the juice executable
+  (``juice_pipe``), writes the dest dataset; ``delete_input=1``
   removes the intermediates on success.
 - **sql** compiles the reference's two query shapes through
   ``plans/sql_frontend`` onto the parquet tables (``--sf-dir``).
@@ -176,7 +180,7 @@ def cmd_store(args) -> int:
 
 # ------------------------------------------------------------- job commands
 
-def _save_text(rdd, path: str) -> None:
+def _save_text(df, path: str) -> None:
     # write to a temp sibling, swap in only on success: deleting the
     # destination BEFORE the job runs destroys the previous dataset
     # when the user exe crashes mid-job (review r12).  tmp is cleaned
@@ -189,7 +193,7 @@ def _save_text(rdd, path: str) -> None:
     if os.path.exists(tmp):
         shutil.rmtree(tmp) if os.path.isdir(tmp) else os.remove(tmp)
     try:
-        rdd.saveAsTextFile(tmp)
+        df.write.text(tmp)
     except BaseException:
         if os.path.exists(tmp):
             shutil.rmtree(tmp) if os.path.isdir(tmp) else os.remove(tmp)
@@ -204,25 +208,22 @@ def cmd_maple(args) -> int:
 
     spark = _spark(args)
     src = _dfs(args.dfs_root, args.sdfs_src_directory)
-    lines = spark.sparkContext.textFile(src)
-    pairs = maple_pipe(lines, args.maple_exe, args.num_maples)
-    out = _dfs(args.dfs_root, args.prefix)
-    _save_text(pairs.map(lambda kv: f"{kv[0]}\t{kv[1]}"), out)
+    pairs = maple_pipe(spark.read.text(src), args.maple_exe, args.num_maples)
+    _save_text(pairs, _dfs(args.dfs_root, args.prefix))
     print(f"maple done: intermediates at dataset {args.prefix!r}")
     return 0
 
 
 def cmd_juice(args) -> int:
-    from .operators.maplejuice import _parse_kv_line, juice_pipe
+    from .operators.maplejuice import juice_pipe
 
     spark = _spark(args)
     inter = _dfs(args.dfs_root, args.prefix)
-    pairs = spark.sparkContext.textFile(inter).map(_parse_kv_line)
     out = juice_pipe(
-        pairs, args.juice_exe, args.num_juices, partitioner=args.partitioner
+        spark.read.text(inter), args.juice_exe, args.num_juices,
+        partitioner=args.partitioner,
     )
-    dest = _dfs(args.dfs_root, args.sdfs_dest_filename)
-    _save_text(out.map(lambda kv: f"{kv[0]}\t{kv[1]}"), dest)
+    _save_text(out, _dfs(args.dfs_root, args.sdfs_dest_filename))
     if args.delete_input:
         shutil.rmtree(inter)
     print(f"juice done: output at dataset {args.sdfs_dest_filename!r}")

@@ -22,6 +22,13 @@ Spark-first mapping — NOT a port of the reference's scheduler:
 - fault tolerance (leader reassignment of failed tasks [spec: A7]) is
   Spark lineage re-execution — nothing to build.
 
+Two surfaces: ``maple``/``juice`` take Python callables over RDDs;
+``maple_pipe``/``juice_pipe`` run arbitrary executables over a
+one-column DataFrame of ``key\\tvalue`` lines through Spark SQL's
+script transformation, so the JVM feeds the user's process directly
+and shuffles and sorts the pairs itself.  The CLI (``__main__``) and
+``q_maplejuice_pipe_wordcount`` both use the executable surface.
+
 The layer exists because the reference's power is *arbitrary user
 functions*, not a fixed algebra; everything expressible there is
 expressible here.  For anything relational, prefer the DataFrame
@@ -37,25 +44,11 @@ at 100 TB whenever the juice function is a fold.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Callable, Iterable, Tuple
 
 from pyspark.rdd import RDD, portable_hash
-
-
-def _pipe_env(env: dict | None) -> dict:
-    """Child-process environment for ``rdd.pipe``.
-
-    PySpark passes ``env`` VERBATIM to ``Popen(..., env=env)`` — an
-    empty dict therefore launches the exe with NO environment at all,
-    so a command like ``python foo.py`` dies with FileNotFoundError
-    (no PATH to resolve ``python``).  Inherit the driver's environment
-    and overlay the caller's vars, matching Hadoop streaming's
-    behavior (task env = node env + user -cmdenv overrides).  Local
-    mode: driver env == worker env; on a cluster the exe should be
-    shipped via ``addFile`` and referenced absolutely anyway (see
-    maple_pipe docstring)."""
-    return {**os.environ, **(env or {})}
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 KV = Tuple[Any, Any]
 
@@ -145,94 +138,127 @@ def reduce_by_key(
     return pairs.reduceByKey(merge, numPartitions=num_juices, partitionFunc=part)
 
 
-def _parse_kv_line(line: str) -> KV:
-    """``key\\tvalue`` → (key, value); value may itself contain tabs
-    (only the FIRST tab frames the key, as in Hadoop streaming)."""
-    k, _, v = line.partition("\t")
-    return (k, v)
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal, with ``{``/``}`` doubled
+    because ``spark.sql(query, df=...)`` formats the query text."""
+    lit = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + lit.replace("{", "{{").replace("}", "}}") + "'"
 
 
-def maple_pipe(
-    lines: RDD,
-    maple_cmd: str,
-    num_maples: int,
-    env: dict | None = None,
-) -> RDD:
+def _transform(df: DataFrame, cmd: str) -> DataFrame:
+    """Pipe the one string column ``line`` of ``df`` through the shell
+    command ``cmd``, one process per partition, with Spark SQL's script
+    transformation (Hive/Hadoop streaming's ``SELECT TRANSFORM ...
+    USING``): the JVM writes the lines to the child's stdin and reads
+    its stdout, so no row crosses into a Python worker.
+
+    The output row format makes each stdout line one whole field: its
+    field delimiter is the line delimiter (Spark's default ``\\u0001``
+    would cut lines), and its NULL marker is ``\\n``, which no
+    ``\\n``-framed line can equal (the default ``\\N`` would turn that
+    line into NULL).  A line without a tab gains a trailing tab, so
+    every output line is framed ``key\\tvalue``."""
+    out = df.sparkSession.sql(
+        "SELECT TRANSFORM(line)"
+        " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' LINES TERMINATED BY '\\n'"
+        f" USING {_sql_string(cmd)} AS (line string)"
+        " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\n' LINES TERMINATED BY '\\n'"
+        " NULL DEFINED AS '\\n'"
+        " FROM {df}",
+        df=df,
+    )
+    line = F.col("line")
+    return out.select(
+        F.when(F.instr(line, "\t") == 0, F.concat(line, F.lit("\t")))
+        .otherwise(line)
+        .alias("line")
+    )
+
+
+def maple_pipe(lines: DataFrame, maple_cmd: str, num_maples: int) -> DataFrame:
     """Map phase with a true PROCESS-BOUNDARY user function [spec: A1]:
     ``maple_cmd`` is an arbitrary executable (shell command line) that
     reads input lines on stdin and emits ``key\\tvalue`` lines on
     stdout — the reference's ``maple_exe`` contract, which the
     callable-based :func:`maple` cannot honour for a user with a legacy
-    binary.  ``rdd.pipe`` is the exact Spark equivalent: one process
-    per partition, lines streamed through, output lines re-collected.
+    binary.
+
+    ``lines`` is a DataFrame of one string column (any name); the
+    result has one string column ``line`` framed ``key\\tvalue``, the
+    input :func:`juice_pipe` takes.  The maple runs as ``num_maples``
+    tasks (one child process each) after a round-robin repartition.
 
     Framing contract (Hadoop streaming's): records are newline-framed,
     key/value tab-framed on the first tab.  Input lines must therefore
-    be newline-free and keys tab-free — same constraint the reference's
-    line-oriented SDFS files impose.
+    be free of ``\\n``/``\\r`` and keys tab-free — the constraint the
+    reference's line-oriented SDFS files impose.  Semantics of the
+    script transformation that :func:`_transform` runs:
+
+    - the command runs as ``/bin/bash -c <cmd>``, so shell syntax
+      (quotes, pipes, redirections) works;
+    - the child inherits the executor's environment;
+    - output records are framed by ``\\n``, ``\\r`` or ``\\r\\n`` —
+      the framing ``spark.read.text`` applies to every DFS dataset;
+    - a NULL input line reaches the exe as ``\\N``;
+    - an exe that exits non-zero fails its task, so a crash is loud
+      and Spark re-runs the task [spec: A7] instead of keeping a
+      truncated output.
 
     Cluster note: ship the executable with ``spark.sparkContext.
     addFile(exe)`` (then reference it via ``SparkFiles.get``) so every
-    executor node has it; on local mode a repo path works as-is.
-
-    Scale: the child process is per-PARTITION, not per-record — pipe
-    startup cost amortizes over the partition, data streams through
-    pipes without materializing, and Spark's lineage re-runs a failed
-    pipe task exactly like a failed maple task [spec: A7]."""
-    if lines.getNumPartitions() != num_maples:
-        lines = lines.repartition(num_maples)
-    # checkCode=True: a crashing exe fails the task LOUDLY (and Spark
-    # re-runs it [spec: A7]) instead of silently truncating output.
-    return lines.pipe(
-        maple_cmd, env=_pipe_env(env), checkCode=True
-    ).map(_parse_kv_line)
+    executor node has it; on local mode a repo path works as-is."""
+    return _transform(lines.toDF("line").repartition(num_maples), maple_cmd)
 
 
 def juice_pipe(
-    pairs: RDD,
+    pairs: DataFrame,
     juice_cmd: str,
     num_juices: int,
     partitioner: str = "hash",
-    env: dict | None = None,
-) -> RDD:
+) -> DataFrame:
     """Reduce phase with a process-boundary user function [spec: A2]:
     ``juice_cmd`` reads SORTED ``key\\tvalue`` lines on stdin (equal
     keys adjacent — the engine guarantees it, exactly what Hadoop
     streaming guarantees a reducer) and emits ``key\\tvalue`` output
-    lines on key boundaries.
+    lines on key boundaries.  ``pairs`` is one string column of
+    ``key\\tvalue`` lines (the key is the text before the first tab,
+    the whole line when it has none), which reach the exe unchanged;
+    the result is framed like :func:`maple_pipe`'s, with the same
+    process semantics.
 
-    The key→task assignment keeps the reference's partitioners: hash
-    [spec: A3] via ``repartitionAndSortWithinPartitions`` (one shuffle;
-    the sort is Spark's spill-aware ExternalSorter, so a juice
-    partition larger than memory sorts on disk rather than OOMing —
-    the 100 TB-safe form of "group all values for a key") or range
-    [spec: A4] via ``sortByKey`` (sampled RangePartitioner, partitions
-    are globally ordered AND internally sorted)."""
-    kv = pairs.map(lambda p: (str(p[0]), str(p[1])))
+    The key→task assignment keeps the reference's partitioners, as one
+    JVM shuffle followed by ``sortWithinPartitions(key)`` — Spark's
+    spill-aware external sorter, so a juice partition larger than
+    memory sorts on disk rather than OOMing (the 100 TB-safe form of
+    "group all values for a key"):
+
+    - hash [spec: A3]: ``repartition(num_juices, key)``, i.e. Spark's
+      Murmur3 hash of the key ``pmod num_juices`` (the spec asks only
+      for ``hash(key) % num_juices``);
+    - range [spec: A4]: ``repartitionByRange(num_juices, key)``
+      (sampled range bounds), so non-empty partitions are globally
+      ordered AND internally sorted."""
+    pairs = pairs.toDF("line")
+    key = F.substring_index("line", "\t", 1)
     if partitioner == "hash":
-        parted = kv.repartitionAndSortWithinPartitions(
-            numPartitions=num_juices, partitionFunc=portable_hash
-        )
+        parted = pairs.repartition(num_juices, key)
     elif partitioner == "range":
-        parted = kv.sortByKey(numPartitions=num_juices)
+        parted = pairs.repartitionByRange(num_juices, key)
     else:
         raise ValueError(
             f"unknown partitioner {partitioner!r} (want 'hash' or 'range')"
         )
-    lines = parted.map(lambda p: f"{p[0]}\t{p[1]}")
-    return lines.pipe(
-        juice_cmd, env=_pipe_env(env), checkCode=True
-    ).map(_parse_kv_line)
+    return _transform(parted.sortWithinPartitions(key), juice_cmd)
 
 
 def maple_juice_pipe(
-    lines: RDD,
+    lines: DataFrame,
     maple_cmd: str,
     juice_cmd: str,
     num_maples: int,
     num_juices: int,
     partitioner: str = "hash",
-) -> RDD:
+) -> DataFrame:
     """Full external-executable job [spec: A1-A4]: maple exe →
     (shuffle+sort) → juice exe, both across a real process boundary."""
     return juice_pipe(

@@ -83,10 +83,11 @@ def q_maplejuice_pipe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     fed by stdin/stdout, which the Python-callable maple()/juice()
     layer cannot claim parity with].  The two checked-in standalone
     programs (exes/wordcount_{maple,juice}.py) know nothing about
-    Spark; the engine streams partitions through them with rdd.pipe and
-    the same hash partitioner + sorted-reducer-input contract as
-    Hadoop streaming.  Must hash-match the same SQL oracle as the
-    in-process and pure-DataFrame wordcount variants."""
+    Spark; the engine streams partitions through them with Spark SQL's
+    script transformation (the JVM feeds each process; no Python worker
+    in the path) and the same hash partitioner + sorted-reducer-input
+    contract as Hadoop streaming.  Must hash-match the same SQL oracle
+    as the in-process and pure-DataFrame wordcount variants."""
     import os
     import sys
 
@@ -95,16 +96,18 @@ def q_maplejuice_pipe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     py = sys.executable or "python3"
     d = T(spark, sf_dir, "documents")
-    lines = d.select("text").rdd.map(lambda r: r.text)
     out = maple_juice_pipe(
-        lines,
+        d.select("text"),
         maple_cmd=f"{py} {os.path.join(exe_dir, 'wordcount_maple.py')}",
         juice_cmd=f"{py} {os.path.join(exe_dir, 'wordcount_juice.py')}",
         num_maples=8,
         num_juices=8,
         partitioner="hash",
-    ).map(lambda kv: (kv[0], int(kv[1])))
-    return spark.createDataFrame(out, schema="word string, n long").orderBy("word")
+    )
+    kv = F.split("line", "\t", 2)
+    return out.select(
+        kv[0].alias("word"), kv[1].cast("long").alias("n")
+    ).orderBy("word")
 
 
 @query(

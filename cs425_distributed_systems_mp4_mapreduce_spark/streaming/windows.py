@@ -227,13 +227,19 @@ def drain_finite_stateful_stream(q, timeout_s: int = 420) -> None:
     burning scheduler + state-store cycles for the rest of the
     process (measured r14: two abandoned queries slowed every later
     Spark job in the test session ~16×).  Every emission for data
-    batch k is committed to the sink when batch k finishes, so the
-    results are complete as soon as one empty batch follows a
-    non-empty one: poll ``recentProgress`` for that signature and stop
-    the query.  No result rows are lost by stopping (memory-sink
-    commits are synchronous per batch).  A query that died instead of
-    draining re-raises its ``StreamingQueryException`` here, so a
-    failing stateful function is never mistaken for a drained stream."""
+    batch k is committed to the sink when batch k finishes, and
+    availableNow runs a batch that consumes no new source offsets only
+    once every available offset has been consumed — so the results are
+    complete as soon as ``recentProgress`` shows such a no-data batch
+    (every source's ``startOffset == endOffset``): poll for it and stop
+    the query.  The signature is the offsets, not the row counts, so a
+    source that never delivers a row (zero-row replay files) drains as
+    soon as its files are read instead of waiting out ``timeout_s``,
+    and a zero-row file ahead of the data is not mistaken for the end.
+    No result rows are lost by stopping (memory-sink commits are
+    synchronous per batch).  A query that died instead of draining
+    re-raises its ``StreamingQueryException`` here, so a failing
+    stateful function is never mistaken for a drained stream."""
     import time as _time
 
     deadline = _time.time() + timeout_s
@@ -243,8 +249,10 @@ def drain_finite_stateful_stream(q, timeout_s: int = 420) -> None:
             raise TimeoutError(
                 f"stateful stream {q.name!r} did not drain within {timeout_s}s"
             )
-        rows = [p["numInputRows"] for p in q.recentProgress]
-        if any(r > 0 for r in rows) and rows[-1] == 0:
+        progress = q.recentProgress
+        if progress and all(
+            s["startOffset"] == s["endOffset"] for s in progress[-1]["sources"]
+        ):
             break
         _time.sleep(1)
     q.stop()

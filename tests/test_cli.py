@@ -16,6 +16,7 @@ import os
 import subprocess
 import sys
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -153,3 +154,39 @@ def test_get_missing_and_dir_dataset(dfs, tmp_path):
     out = tmp_path / "out.txt"
     assert _run(dfs, "get", "ds", str(out)) == 0
     assert out.read_text() == "hello\nworld\n"  # sorted file order
+
+
+def _tree_bytes(root: str) -> dict:
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in Path(root).rglob("*") if p.is_file()
+    }
+
+
+def test_crashing_maple_keeps_old_dataset(spark, dfs, tmp_path):
+    """An exe that exits non-zero fails the maple loudly; the dataset
+    already at the prefix stays byte-identical and no staging
+    directory is left behind (review r12, ADVICE r13-r14)."""
+    src = tmp_path / "input.txt"
+    src.write_text("\n".join(LINES) + "\n")
+    _run(dfs, "put", str(src), "corpus")
+    assert _run(dfs, "maple", MAPLE_EXE, "2", "wc_int", "corpus") == 0
+    before = _tree_bytes(os.path.join(dfs, "wc_int"))
+
+    with pytest.raises(Exception, match="status 3"):
+        _run(dfs, "maple", "cat >/dev/null; exit 3", "2", "wc_int", "corpus")
+    assert _tree_bytes(os.path.join(dfs, "wc_int")) == before
+    assert not [n for n in os.listdir(dfs) if ".__tmp__" in n]
+
+
+def test_maple_command_quoting_reaches_bash_intact(spark, dfs, tmp_path):
+    """The exe is a bash command line embedded in a SQL string literal:
+    single quotes, backslashes and braces must reach bash unchanged."""
+    src = tmp_path / "input.txt"
+    src.write_text("x\n")
+    _run(dfs, "put", str(src), "corpus")
+    cmd = r"""cat >/dev/null; printf '%s\n' 'it'\''s a \back {x}'"""
+    assert _run(dfs, "maple", cmd, "1", "quoted", "corpus") == 0
+    out = tmp_path / "q.txt"
+    _run(dfs, "get", "quoted", str(out))
+    assert out.read_text() == "it's a \\back {x}\t\n"

@@ -4,6 +4,8 @@ partitioner completeness, hash≡range results, frontend compilation)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cs425_distributed_systems_mp4_mapreduce_spark.operators.maplejuice import (
@@ -178,19 +180,18 @@ def _exe_cmds():
 
 @pytest.mark.parametrize("partitioner", ["hash", "range"])
 def test_pipe_wordcount_equals_in_process(spark, partitioner):
-    """[spec: A1/A2] external-executable job (rdd.pipe process
-    boundary) must agree with the in-process callable job for both
-    partitioners [A3/A4]."""
+    """[spec: A1/A2] external-executable job (script-transformation
+    process boundary) must agree with the in-process callable job for
+    both partitioners [A3/A4]."""
     from cs425_distributed_systems_mp4_mapreduce_spark.operators.maplejuice import (
         maple_juice_pipe,
     )
 
     maple_cmd, juice_cmd = _exe_cmds()
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("text")
+    out = maple_juice_pipe(docs, maple_cmd, juice_cmd, 4, 4, partitioner)
     got = {
-        (k, int(v))
-        for k, v in maple_juice_pipe(
-            _doc_lines(spark), maple_cmd, juice_cmd, 4, 4, partitioner
-        ).collect()
+        (k, int(v)) for k, v in (r.line.split("\t", 1) for r in out.collect())
     }
     # in-process twin keeps empty tokens too (exe splits on ' ' keeping
     # empties, matching STRING_SPLIT)
@@ -207,27 +208,92 @@ def test_pipe_wordcount_equals_in_process(spark, partitioner):
     assert got == want
 
 
+def _cat_juice_partitions(spark, partitioner):
+    """Keys of each juice task's stdin, in order, with ``cat`` as the
+    juice exe: 100 pairs over 7 keys from 5 input partitions, 3 juices."""
+    from cs425_distributed_systems_mp4_mapreduce_spark.operators.maplejuice import (
+        juice_pipe,
+    )
+
+    pairs = spark.createDataFrame(
+        [(f"k{i % 7}\t{i}",) for i in range(100)], "line string"
+    ).repartition(5)
+    out = juice_pipe(pairs, "cat", 3, partitioner)
+    per_part = out.rdd.mapPartitionsWithIndex(
+        lambda i, it: [(i, [r.line.split("\t", 1)[0] for r in it])]
+    ).collect()
+    return [keys for _, keys in sorted(per_part)]
+
+
 def test_juice_pipe_sorted_reducer_contract(spark):
     """Each juice partition pipes its lines with equal keys ADJACENT
     (sorted) — the Hadoop-streaming reducer contract the checked-in
     juice exe relies on.  `cat` as the juice exe exposes the raw stdin
     stream; verify per-partition key-sortedness and hash completeness."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.operators.maplejuice import (
-        juice_pipe,
-    )
-
-    pairs = spark.sparkContext.parallelize(
-        [(f"k{i % 7}", str(i)) for i in range(100)], 5
-    )
-    out = juice_pipe(pairs, "cat", 3, "hash")
-    per_part = out.mapPartitionsWithIndex(
-        lambda i, it: [(i, [k for k, _ in it])]
-    ).collect()
     total = 0
-    for _, keys in per_part:
+    for keys in _cat_juice_partitions(spark, "hash"):
         assert keys == sorted(keys), f"unsorted reducer input: {keys[:10]}"
         total += len(keys)
     assert total == 100  # every pair crossed the pipe exactly once
+
+
+def test_juice_pipe_range_partitions_globally_ordered(spark):
+    """[spec: A4] the range partitioner's juice tasks each read a
+    sorted stream, and the non-empty tasks cover disjoint, ascending
+    key ranges."""
+    parts = [keys for keys in _cat_juice_partitions(spark, "range") if keys]
+    assert len(parts) >= 2, "need multiple non-empty partitions to test"
+    for keys in parts:
+        assert keys == sorted(keys), f"unsorted reducer input: {keys[:10]}"
+    for lo, hi in zip(parts, parts[1:]):
+        assert lo[-1] < hi[0], f"partitions not range-ordered: {parts}"
+    assert sum(map(len, parts)) == 100
+
+
+#: lines a ``\\n``-framed pipe can carry: any text free of ``\\n``/``\\r``
+#: and of lone surrogates (not encodable as UTF-8, so no text dataset
+#: holds one; Spark replaces them before any pipe runs), plus the lines
+#: a script transformation's default row formats would mangle — Hive's
+#: NULL marker ``\\N``, the default field delimiter ``\\u0001``, a NUL,
+#: tab runs, empty and non-ASCII lines
+_PIPE_LINE = st.one_of(
+    st.sampled_from(
+        ["\\N", "k\t\\N", "\u0001", "a\u0001b\tc", "\u0000", "", "\t",
+         "k\tv\tw\t", "\t\t\t", "ünï\tcödé ✓", "no tab"]
+    ),
+    st.text(
+        st.characters(exclude_categories=("Cs",), exclude_characters="\n\r"),
+        max_size=12,
+    ),
+)
+
+
+def _kv_normal(line: str) -> str:
+    """The pipe's output framing of ``line``: split on the first tab,
+    re-joined, so a line without a tab gains a trailing one."""
+    k, _, v = line.partition("\t")
+    return f"{k}\t{v}"
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(_PIPE_LINE, max_size=30))
+@example(["\\N", "\u0001x\u0001y", "\u0000", "", "a\tb\tc", "ünï"])
+def test_pipe_framing_is_lossless_through_cat(spark, lines):
+    """``cat`` as the maple and then as the juice exe returns every
+    input line, normalised to ``key\\tvalue`` and otherwise intact: no
+    line lost, split, truncated or turned into NULL."""
+    from cs425_distributed_systems_mp4_mapreduce_spark.operators.maplejuice import (
+        juice_pipe,
+        maple_pipe,
+    )
+
+    df = spark.createDataFrame([(l,) for l in lines], "text string")
+    mapled = maple_pipe(df, "cat", 2)
+    want = sorted(_kv_normal(l) for l in lines)
+    assert sorted(r.line for r in mapled.collect()) == want
+    juiced = juice_pipe(mapled, "cat", 3)
+    assert sorted(r.line for r in juiced.collect()) == want
+
 
 def test_sql_frontend_self_join_rejected():
     """Review r12: the name-keyed join-field dict silently collapsed

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
@@ -14,21 +18,23 @@ from conftest import SF_SMOKE
 # applyInPandasWithState
 
 
-def test_stateful_user_activity_matches_batch(spark, tmp_path):
+def _drain_user_activity(spark, chunks, name, max_files_per_trigger=2, timeout_s=420):
+    """Run the stateful user-activity stream over a replay directory to
+    its drained end; returns the memory-sink table."""
     from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful import (
         user_activity_stream,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
         drain_finite_stateful_stream,
         events_stream,
-        replay_dir,
     )
 
-    chunks = replay_dir(spark, SF_SMOKE, str(tmp_path / "replay"), 4)
-    stream = user_activity_stream(events_stream(spark, chunks))
+    stream = user_activity_stream(
+        events_stream(spark, chunks, max_files_per_trigger)
+    )
     q = (
         stream.writeStream.format("memory")
-        .queryName("useract")
+        .queryName(name)
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
@@ -36,11 +42,14 @@ def test_stateful_user_activity_matches_batch(spark, tmp_path):
     # drain + STOP: ProcessingTimeTimeout otherwise keeps the
     # availableNow query alive on empty timer batches for the rest of
     # the session (see streaming/windows.drain_finite_stateful_stream)
-    drain_finite_stateful_stream(q)
+    drain_finite_stateful_stream(q, timeout_s)
+    return spark.table(name)
+
+
+def _assert_user_activity_matches_batch(spark, table):
     # update mode re-emits per batch; the LAST row per user is the total
     got = (
-        spark.table("useract")
-        .groupBy("user_id")
+        table.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
         .toPandas()
         .sort_values("user_id")
@@ -55,6 +64,60 @@ def test_stateful_user_activity_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     assert got.equals(want), (got.head(), want.head())
+
+
+def test_stateful_user_activity_matches_batch(spark, tmp_path):
+    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
+        replay_dir,
+    )
+
+    chunks = replay_dir(spark, SF_SMOKE, str(tmp_path / "replay"), 4)
+    table = _drain_user_activity(spark, chunks, "useract")
+    _assert_user_activity_matches_batch(spark, table)
+
+
+def _empty_events_file(spark, out_dir, mtime):
+    """Write one zero-row events parquet file into ``out_dir`` with
+    modification time ``mtime`` (the file source replays by mtime)."""
+    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
+        EVENTS_SCHEMA,
+    )
+
+    staging = f"{out_dir}.__empty"
+    spark.createDataFrame([], EVENTS_SCHEMA).coalesce(1).write.parquet(staging)
+    (part,) = [f for f in os.listdir(staging) if f.endswith(".parquet")]
+    dst = os.path.join(out_dir, f"part-empty-{part}")
+    os.makedirs(out_dir, exist_ok=True)
+    shutil.move(os.path.join(staging, part), dst)
+    os.utime(dst, (mtime, mtime))
+    shutil.rmtree(staging)
+
+
+def test_drain_returns_on_a_source_that_never_delivers_a_row(spark, tmp_path):
+    """A replay source of zero-row files keeps an availableNow stateful
+    query scheduling empty batches; draining must see that nothing is
+    left to read and return in seconds, not wait out its timeout."""
+    chunks = str(tmp_path / "replay")
+    _empty_events_file(spark, chunks, time.time() - 100)
+    table = _drain_user_activity(spark, chunks, "useract_empty", timeout_s=60)
+    assert table.count() == 0
+
+
+def test_drain_reads_past_a_leading_zero_row_file(spark, tmp_path):
+    """A zero-row file replayed BEFORE the data is a batch with no input
+    rows that is not the end of the stream: every row still arrives."""
+    from cs425_distributed_systems_mp4_mapreduce_spark.streaming.windows import (
+        replay_dir,
+    )
+
+    chunks = replay_dir(spark, SF_SMOKE, str(tmp_path / "replay"), 2)
+    first = min(
+        os.path.getmtime(os.path.join(chunks, f))
+        for f in os.listdir(chunks) if f.endswith(".parquet")
+    )
+    _empty_events_file(spark, chunks, first - 10)
+    table = _drain_user_activity(spark, chunks, "useract_lead", 1)
+    _assert_user_activity_matches_batch(spark, table)
 
 
 def test_drain_reraises_a_dead_stateful_stream(spark, tmp_path):
