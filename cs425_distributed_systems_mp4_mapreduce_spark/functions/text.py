@@ -43,10 +43,6 @@ def bpeish_tokens(col: str) -> Column:
     return F.regexp_extract_all(F.col(col), F.lit(BPEISH_PATTERN), 0)
 
 
-def token_count(col: str) -> Column:
-    return F.size(ws_tokens(col)).cast("long")
-
-
 # ---------------------------------------------------------------- quality scoring
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -161,3 +157,45 @@ def _langid_one(text: str) -> str:
 def langid_udf(texts: pd.Series) -> pd.Series:
     """Arrow-batched language ID (n-gram/stopword heuristic)."""
     return texts.map(_langid_one)
+
+
+# ---------------------------------------------------------------- fuzzy-match blocking
+
+#: JVM expression producing ALL deletion variants of `word` at depth
+#: <= 2 (FastSS blocking keys): the word itself, every single-char
+#: deletion, every two-char deletion.  sequence(1, L) is safe for any
+#: L >= 1; the (i, j) grid is filtered to j > i rather than generated
+#: with sequence(i+1, L), because Spark's sequence(start, stop)
+#: DESCENDS when start > stop — the empty-range trap.
+DELETION_VARIANTS = """
+array_distinct(concat(
+  array(word),
+  transform(sequence(1, length(word)),
+            i -> concat(substring(word, 1, i - 1),
+                        substring(word, i + 1, length(word) - i))),
+  transform(
+    filter(flatten(transform(sequence(1, length(word)),
+                             i -> transform(sequence(1, length(word)),
+                                            j -> struct(i AS i, j AS j)))),
+           p -> p.j > p.i),
+    p -> concat(substring(word, 1, p.i - 1),
+                substring(word, p.i + 1, p.j - p.i - 1),
+                substring(word, p.j + 1, length(word) - p.j)))
+))
+"""
+
+
+# ---------------------------------------------------------------- integer surprisal
+
+
+def blen_ladder(col: str) -> str:
+    """CASE ladder computing bit_length(col) for 0 ≤ col < 2⁴⁰ — the
+    cross-engine floor-log2 (same convention as operators/bpe.ilog2:
+    blen(c) = k ⟺ 2^(k−1) ≤ c < 2^k, blen(0) = 0), but as a CASE
+    chain that stays inside whole-stage codegen instead of an
+    interpreted HOF indicator sum."""
+    return (
+        "CASE "
+        + " ".join(f"WHEN {col} < {1 << k} THEN {k}" for k in range(0, 41))
+        + " ELSE 41 END"
+    )

@@ -22,18 +22,3 @@ class SplitWords:
             for i, w in enumerate(text.split(" ")):
                 if w:
                     yield w, i
-
-
-@udtf(returnType="shingle: string")
-class Shingles3:
-    """3-token shingles of a line (the MinHash pre-processing step) as
-    a table function."""
-
-    def eval(self, text: str):  # noqa: D102
-        toks = [t for t in (text or "").split(" ") if t]
-        if len(toks) < 3:
-            if toks:
-                yield (" ".join(toks),)
-            return
-        for i in range(len(toks) - 2):
-            yield (" ".join(toks[i : i + 3]),)

@@ -24,10 +24,19 @@ NORM2 = (
     " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
 )
 
-
-def vec_lit(vec: Sequence[float]) -> Column:
-    """A double array literal (e.g. a broadcast query vector)."""
-    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
+#: The q_embed_quantize int8 code expression (bit-identical
+#: cross-engine — see that query's oracle-discipline docstring), with
+#: its DuckDB twin.
+INT8_CODES = (
+    "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 /"
+    " GREATEST(CAST(array_max(transform(embedding, y -> abs(CAST(y AS DOUBLE))))"
+    " AS DOUBLE), 1e-30d) + 0.5d) AS BIGINT))"
+)
+O_INT8_CODES = (
+    "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 /"
+    " GREATEST(CAST(list_max(list_transform(embedding, y -> ABS(CAST(y AS DOUBLE))))"
+    " AS DOUBLE), 1e-30) + 0.5) AS BIGINT))"
+)
 
 
 def dot(a: str, b: str) -> Column:

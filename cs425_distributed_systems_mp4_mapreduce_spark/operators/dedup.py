@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import DELETION_VARIANTS
+
 # --------------------------------------------------------------------------- exact
 
 
@@ -66,6 +68,24 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(da, db)).cast("long")
     union = F.size(F.array_union(da, db)).cast("long")
     return inter / union
+
+
+def fastss_word_edges(w: DataFrame) -> DataFrame:
+    """Edges ``(src, dst)``, src < dst, between the distinct ``word``
+    values of ``w`` at Levenshtein distance ≤ 2: FastSS blocking on
+    shared deletion variants, then the exact distance test on the
+    blocked candidates only."""
+    variants = w.select("word", F.explode(F.expr(DELETION_VARIANTS)).alias("v"))
+    a = variants.select(F.col("word").alias("wa"), "v")
+    b = variants.select(F.col("word").alias("wb"), "v")
+    return (
+        a.join(b, "v")
+        .filter(F.col("wa") < F.col("wb"))
+        .select("wa", "wb")
+        .distinct()
+        .filter(F.levenshtein("wa", "wb") <= 2)
+        .select(F.col("wa").alias("src"), F.col("wb").alias("dst"))
+    )
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -526,43 +546,6 @@ def minhash_near_pairs(
             F.col("datasetB._id").alias("id_b"),
             F.col("jaccard_dist"),
         )
-    )
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    num_tables: int = 16,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """The PRE-VERIFICATION candidate set of :func:`minhash_near_pairs`:
-    distinct (id_a < id_b) pairs colliding in ≥1 of the ``num_tables``
-    single-hash LSH tables — exactly the pairs approxSimilarityJoin
-    would go on to verify with an exact Jaccard distance.
-
-    Diagnostic surface: candidate volume (not final output) is what
-    determines shuffle cost at scale, so tests measure THIS across
-    scale factors to demonstrate ~O(N) growth."""
-    from pyspark.ml.functions import vector_to_array
-
-    feat, model = _minhash_model(df, id_col, text_col, shingle_k, num_tables, num_features)
-    hashed = (
-        model.transform(feat)
-        .select("_id", F.posexplode("_hashes").alias("_t", "_h"))
-        .select("_id", "_t", vector_to_array("_h").getItem(0).alias("_hv"))
-    )
-    a, b = hashed.alias("a"), hashed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a._t") == F.col("b._t"))
-            & (F.col("a._hv") == F.col("b._hv"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

@@ -53,6 +53,10 @@ from pyspark.sql import functions as F
 KV = Tuple[Any, Any]
 
 
+def _unknown_partitioner(partitioner: str) -> ValueError:
+    return ValueError(f"unknown partitioner {partitioner!r} (want 'hash' or 'range')")
+
+
 def _partition(pairs: RDD, num_tasks: int, partitioner: str) -> RDD:
     if partitioner == "hash":
         # [spec: A3] hash(key) % num_juices
@@ -62,7 +66,7 @@ def _partition(pairs: RDD, num_tasks: int, partitioner: str) -> RDD:
         # sortByKey samples key ranges and installs a RangePartitioner;
         # the subsequent groupByKey reuses it (no second shuffle).
         return pairs.sortByKey(numPartitions=num_tasks)
-    raise ValueError(f"unknown partitioner {partitioner!r} (want 'hash' or 'range')")
+    raise _unknown_partitioner(partitioner)
 
 
 def maple(
@@ -128,14 +132,14 @@ def reduce_by_key(
     reduction happens map-side before the shuffle (reduceByKey), so a
     hot key ships one partial per map task instead of every value —
     the scalable form of A2."""
-    part = (
-        portable_hash
-        if partitioner == "hash"
-        else None  # range: let sortByKey below own the partitioning
-    )
+    if partitioner == "hash":
+        return pairs.reduceByKey(
+            merge, numPartitions=num_juices, partitionFunc=portable_hash
+        )
     if partitioner == "range":
+        # sortByKey owns the range partitioning of the reduced pairs
         return pairs.reduceByKey(merge).sortByKey(numPartitions=num_juices)
-    return pairs.reduceByKey(merge, numPartitions=num_juices, partitionFunc=part)
+    raise _unknown_partitioner(partitioner)
 
 
 def _sql_string(s: str) -> str:
@@ -245,9 +249,7 @@ def juice_pipe(
     elif partitioner == "range":
         parted = pairs.repartitionByRange(num_juices, key)
     else:
-        raise ValueError(
-            f"unknown partitioner {partitioner!r} (want 'hash' or 'range')"
-        )
+        raise _unknown_partitioner(partitioner)
     return _transform(parted.sortWithinPartitions(key), juice_cmd)
 
 

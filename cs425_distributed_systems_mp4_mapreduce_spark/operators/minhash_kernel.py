@@ -55,12 +55,6 @@ _SEED = 42  # Spark's xxhash64 default seed
 _CHUNK_CELLS = 8_000_000  # uint64 cells per intermediate matrix (64 MB)
 
 
-def _np():
-    import numpy as np
-
-    return np
-
-
 def _rotl(np, x, r: int):
     r_ = np.uint64(r)
     inv = np.uint64(64 - r)

@@ -1,113 +1,29 @@
-"""Import all query modules for their registration side effects."""
+"""Import every query module for its registration side effects.
 
-from . import (  # noqa: F401
-    analytics_ext,
-    analytics_r4,
-    analytics_r4b,
-    analytics_r7,
-    analytics_r7b,
-    analytics_r7c,
-    analytics_r8,
-    analytics_r8b,
-    analytics_r8c,
-    analytics_r8d,
-    analytics_r9,
-    analytics_r9b,
-    analytics_r9c,
-    analytics_r9d,
-    analytics_r9e,
-    analytics_r9f,
-    analytics_r9g,
-    analytics_r9h,
-    analytics_r9i,
-    analytics_r9j,
-    analytics_r9k,
-    analytics_r9l,
-    analytics_r9m,
-    analytics_r9n,
-    analytics_r9o,
-    analytics_r9p,
-    analytics_r9q,
-    analytics_r9r,
-    analytics_r9s,
-    analytics_r9t,
-    analytics_r9u,
-    analytics_r9v,
-    analytics_r9w,
-    analytics_r9x,
-    analytics_r9y,
-    ann_xengine,
-    extras,
-    ivf_xengine,
-    ivm,
-    llm_ops,
-    maplejuice_q,
-    pipeline_ops,
-    pq_xengine,
-    relational,
-    scalars,
-    sinks,
-    sketches,
-    sql_surface,
-    storage_ops,
-    streaming_twins,
-    tokenizer,
-    tpch_more,
-    windows,
-)
+Most queries sit in the module named by the first word after ``q_``:
 
-__all__ = [
-    "analytics_ext",
-    "analytics_r4",
-    "analytics_r4b",
-    "analytics_r7",
-    "analytics_r7b",
-    "analytics_r7c",
-    "analytics_r8",
-    "analytics_r8b",
-    "analytics_r8c",
-    "analytics_r8d",
-    "analytics_r9",
-    "analytics_r9b",
-    "analytics_r9c",
-    "analytics_r9d",
-    "analytics_r9e",
-    "analytics_r9f",
-    "analytics_r9g",
-    "analytics_r9h",
-    "analytics_r9i",
-    "analytics_r9j",
-    "analytics_r9k",
-    "analytics_r9l",
-    "analytics_r9m",
-    "analytics_r9n",
-    "analytics_r9o",
-    "analytics_r9p",
-    "analytics_r9q",
-    "analytics_r9r",
-    "analytics_r9s",
-    "analytics_r9t",
-    "analytics_r9u",
-    "analytics_r9v",
-    "analytics_r9w",
-    "analytics_r9x",
-    "analytics_r9y",
-    "ann_xengine",
-    "extras",
-    "ivf_xengine",
-    "ivm",
-    "llm_ops",
-    "maplejuice_q",
-    "pipeline_ops",
-    "pq_xengine",
-    "relational",
-    "scalars",
-    "sinks",
-    "sketches",
-    "sql_surface",
-    "storage_ops",
-    "streaming_twins",
-    "tokenizer",
-    "tpch_more",
-    "windows",
-]
+* ``stats`` — stats
+* ``aggregates`` — agg, pivot, unpivot, rollup, skyline
+* ``windows`` — window, timeseries
+* ``events`` — events, orders, customer, lineitem, basket, rules
+* ``relational`` — join, set, interval, lateral, merge, scd2, table,
+  secondary
+* ``text`` — text, tokenizer
+* ``llm_ops`` — dedup, sim, knn, embed, multimodal
+* ``graph`` — graph, entity
+* ``pipeline_ops`` — mix, sample, quality, validate, profile
+* ``sketches``, ``tpch_more``, ``scalars``, ``sinks``, ``storage_ops``
+  — sketch, tpch, scalar, source, encode
+
+The operator-centred modules (``llm_ops``, ``pipeline_ops``,
+``tokenizer``, the ``*_xengine`` ANN twins, ``ivm``, ``maplejuice_q``,
+``sql_surface``, ``streaming_twins``) also hold queries named for the
+operator they exercise.  A new module is picked up without editing this
+file.
+"""
+
+import importlib
+import pkgutil
+
+for _mod in pkgutil.iter_modules(__path__):
+    importlib.import_module(f"{__name__}.{_mod.name}")

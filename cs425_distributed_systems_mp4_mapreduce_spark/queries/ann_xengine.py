@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import INT8_CODES, O_INT8_CODES
 from ..registry import query
 from ..sources.tables import table as T
 
@@ -66,19 +67,6 @@ def _mix(x: int) -> int:
 PLANES: list[list[int]] = [
     [_mix(j * _DIM + d) % 15 - 7 for d in range(_DIM)] for j in range(_N_PLANES)
 ]
-
-#: The q_embed_quantize int8 code expression (bit-identical
-#: cross-engine — see that query's oracle-discipline docstring).
-_CODES_SPARK = (
-    "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 /"
-    " GREATEST(CAST(array_max(transform(embedding, y -> abs(CAST(y AS DOUBLE))))"
-    " AS DOUBLE), 1e-30d) + 0.5d) AS BIGINT))"
-)
-_CODES_SQL = (
-    "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127.0 /"
-    " GREATEST(CAST(list_max(list_transform(embedding, y -> ABS(CAST(y AS DOUBLE))))"
-    " AS DOUBLE), 1e-30) + 0.5) AS BIGINT))"
-)
 
 
 def _band_exprs_spark() -> list:
@@ -119,7 +107,7 @@ def _bands_sql() -> str:
 
 _ANN_XENGINE_ORACLE = f"""
 WITH q AS (
-  SELECT vec_id, {_CODES_SQL} AS codes FROM embeddings),
+  SELECT vec_id, {O_INT8_CODES} AS codes FROM embeddings),
 sig AS (
   SELECT vec_id, codes, {_bands_sql()} FROM q),
 cand AS (
@@ -158,7 +146,7 @@ def q_sim_ann_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the discovery shuffle."""
     e = T(spark, sf_dir, "embeddings")
     sig = e.select(
-        "vec_id", F.expr(_CODES_SPARK).alias("codes")
+        "vec_id", F.expr(INT8_CODES).alias("codes")
     ).select("vec_id", "codes", *_band_exprs_spark())
     bands = sig.select(
         "vec_id",

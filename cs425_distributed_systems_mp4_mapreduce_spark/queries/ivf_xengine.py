@@ -39,9 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import INT8_CODES, O_INT8_CODES
 from ..registry import query
 from ..sources.tables import table as T
-from .ann_xengine import _CODES_SPARK, _CODES_SQL
 
 _DIM = 64
 _C = 8        # coarse cells (anchor vectors 0..7)
@@ -50,7 +50,7 @@ _TOPK = 10
 
 _IVF_ORACLE = f"""
 WITH cod AS (
-  SELECT vec_id, {_CODES_SQL} AS codes FROM embeddings),
+  SELECT vec_id, {O_INT8_CODES} AS codes FROM embeddings),
 anch AS (
   SELECT vec_id AS c, codes FROM cod WHERE vec_id < {_C}),
 q AS (
@@ -97,7 +97,7 @@ def q_sim_ann_ivf_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted bucket-pruned index (q_sim_ann_ivf_index, probe-vs-scan
     measured in SCALE_PROBE.json's ivf section)."""
     e = T(spark, sf_dir, "embeddings")
-    cod = e.select("vec_id", F.expr(_CODES_SPARK).alias("codes"))
+    cod = e.select("vec_id", F.expr(INT8_CODES).alias("codes"))
 
     # bounded driver-side collect (C anchors incl. the query vector) —
     # the per-query probe-set computation real IVF serving does

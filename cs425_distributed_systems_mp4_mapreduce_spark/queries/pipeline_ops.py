@@ -13,7 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import blen_ladder
 from ..operators.dedup import shingle_col
+from ..operators.sampling import KNUTH
 from ..registry import query
 from ..sources.tables import table as T
 
@@ -787,3 +789,625 @@ def q_decontaminate_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_needles"))
         .orderBy("doc_id")
     )
+
+
+def _profile_block_sql(col: str, minmax: str) -> str:
+    """One UNION-ALL block of the profiling oracle; ``minmax`` is a SQL
+    expression template receiving the aggregate (MIN/MAX) call."""
+    return f"""
+    SELECT '{col}' AS col, COUNT(*) AS n_rows,
+           COUNT(*) - COUNT({col}) AS n_null,
+           COUNT(DISTINCT {col}) AS n_distinct,
+           {minmax.format(agg=f"MIN({col})")} AS min_s,
+           {minmax.format(agg=f"MAX({col})")} AS max_s
+    FROM orders
+    """
+
+
+#: per-type normalization into strings so one result relation profiles
+#: heterogeneous columns.  Doubles detour through DECIMAL(18,2) —
+#: decimal→string renders identically in Spark and DuckDB, while raw
+#: double→string does not (scientific-notation thresholds differ).
+_MINMAX = {
+    "o_orderkey": "CAST({agg} AS VARCHAR)",
+    "o_totalprice": "CAST(CAST({agg} AS DECIMAL(18,2)) AS VARCHAR)",
+    "o_orderstatus": "{agg}",
+}
+
+
+@query(
+    "q_profile_table",
+    oracle=" UNION ALL ".join(
+        _profile_block_sql(c, t) for c, t in _MINMAX.items()
+    )
+    + " ORDER BY col",
+)
+def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column profiling (the ANALYZE/data-quality sweep): per column —
+    row count, null count, exact distinct count, min/max normalized to
+    strings.  One scan per column block, each a partial+final agg; at
+    100 TB you'd fuse the blocks into one pass with conditional
+    aggregates or approx_count_distinct, but the exact per-column form
+    is what the oracle can replay bit-for-bit."""
+    o = T(spark, sf_dir, "orders")
+    blocks = []
+    for colname in _MINMAX:
+        col = F.col(colname)
+        if colname == "o_totalprice":
+            mn = F.min(col).cast("decimal(18,2)").cast("string")
+            mx = F.max(col).cast("decimal(18,2)").cast("string")
+        else:
+            mn = F.min(col).cast("string")
+            mx = F.max(col).cast("string")
+        blocks.append(
+            o.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                (F.count(F.lit(1)) - F.count(col)).alias("n_null"),
+                F.count_distinct(col).alias("n_distinct"),
+                mn.alias("min_s"),
+                mx.alias("max_s"),
+            ).select(F.lit(colname).alias("col"), "*")
+        )
+    out = blocks[0]
+    for b in blocks[1:]:
+        out = out.unionByName(b)
+    return out.orderBy("col")
+
+
+@query(
+    "q_sample_reservoir",
+    oracle="""
+    WITH ranked AS (
+      SELECT doc_id, lang, n_chars,
+             ROW_NUMBER() OVER (PARTITION BY lang
+                 ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+      FROM documents
+    )
+    SELECT doc_id, lang, n_chars, rk FROM ranked WHERE rk <= 5
+    ORDER BY lang, rk
+    """,
+)
+def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-group reservoir sample: k=5 documents per
+    language, selected by rank of md5(doc_id) — a uniform-at-random
+    draw (the hash is effectively a random permutation) that is
+    REPRODUCIBLE across engines and runs, unlike rand()-based
+    sampling.  This is how a pipeline pins audit samples: same corpus
+    in, same sample out, no seed bookkeeping.
+
+    Scale shape: per-group top-k over a hash ordering — Spark plans
+    the rank filter as WindowGroupLimit, pruning to ≤k rows per group
+    BEFORE the shuffle, so the exchange carries k·|groups| rows, not
+    the corpus."""
+    d = T(spark, sf_dir, "documents")
+    w = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    return (
+        d.select("doc_id", "lang", "n_chars")
+        .withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= 5)
+        .orderBy("lang", "rk")
+    )
+
+
+# --------------------------------------------------------------------------
+# Data-quality constraint audit
+# --------------------------------------------------------------------------
+
+@query(
+    "q_validate_constraints",
+    oracle="""
+    WITH o AS (
+      SELECT COUNT(*) AS n,
+             CAST(SUM(CASE WHEN o_totalprice > 0 THEN 0 ELSE 1 END)
+                  AS BIGINT) AS v_price,
+             CAST(SUM(CASE WHEN o_orderstatus IN ('O','F','P') THEN 0 ELSE 1 END)
+                  AS BIGINT) AS v_status,
+             COUNT(*) - COUNT(DISTINCT o_orderkey) AS v_unique
+      FROM orders
+    ),
+    l AS (
+      SELECT COUNT(*) AS n,
+             CAST(SUM(CASE WHEN l_discount BETWEEN 0 AND 1 THEN 0 ELSE 1 END)
+                  AS BIGINT) AS v_disc
+      FROM lineitem
+    ),
+    fk AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS v_fk
+      FROM lineitem li
+      WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = li.l_orderkey)
+    )
+    SELECT rule, n_checked, n_violations
+    FROM (
+      SELECT 'lineitem_discount_in_range' AS rule, l.n AS n_checked, l.v_disc AS n_violations FROM l
+      UNION ALL
+      SELECT 'lineitem_fk_orders', l.n, fk.v_fk FROM l, fk
+      UNION ALL
+      SELECT 'orders_orderkey_unique', o.n, o.v_unique FROM o
+      UNION ALL
+      SELECT 'orders_status_domain', o.n, o.v_status FROM o
+      UNION ALL
+      SELECT 'orders_totalprice_positive', o.n, o.v_price FROM o
+    )
+    ORDER BY rule
+    """,
+)
+def q_validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Constraint audit (dbt-test / Great-Expectations shape): range,
+    domain, and uniqueness rules as one conditional-aggregation scan
+    per table, FK integrity as one left-anti join, unpivoted via
+    ``stack`` into a (rule, n_checked, n_violations) report.  NULL
+    predicate results count as violations on both engines (CASE WHEN
+    pred THEN 0 ELSE 1).  Cost = one scan per audited table.
+
+    Scale: each rule family is ONE map-side-combined conditional-agg scan
+    per table (violations are counted in the scan that reads the table,
+    so the audit costs what a COUNT(*) costs); the FK anti-join
+    broadcasts the key side when bounded or falls back to the SMJ
+    Catalyst picks."""
+    o = T(spark, sf_dir, "orders")
+    li = T(spark, sf_dir, "lineitem")
+
+    viol = lambda pred: F.sum(F.when(pred, 0).otherwise(1))  # noqa: E731
+    o_agg = o.agg(
+        F.count(F.lit(1)).alias("o_rows"),
+        viol(F.col("o_totalprice") > 0).alias("v_price"),
+        viol(F.col("o_orderstatus").isin("O", "F", "P")).alias("v_status"),
+        (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("v_unique"),
+    )
+    l_agg = li.agg(
+        F.count(F.lit(1)).alias("l_rows"),
+        viol(F.col("l_discount").between(0, 1)).alias("v_disc"),
+    )
+    fk_agg = (
+        li.join(o.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"), "left_anti")
+        .agg(F.count(F.lit(1)).alias("v_fk"))
+    )
+    row = o_agg.crossJoin(l_agg).crossJoin(fk_agg)
+    return row.selectExpr(
+        """stack(5,
+            'lineitem_discount_in_range', l_rows, v_disc,
+            'lineitem_fk_orders',         l_rows, v_fk,
+            'orders_orderkey_unique',     o_rows, v_unique,
+            'orders_status_domain',       o_rows, v_status,
+            'orders_totalprice_positive', o_rows, v_price
+        ) AS (rule, n_checked, n_violations)"""
+    ).orderBy("rule")
+
+
+# --------------------------------------------------------------------------
+# Weighted systematic (PPS) sampling
+# --------------------------------------------------------------------------
+
+#: one pick per $10M of cumulative order value (integer cents)
+_PPS_STEP = 1_000_000_000
+
+
+@query(
+    "q_sample_systematic",
+    oracle=f"""
+    SELECT o_orderkey, o_orderpriority, w, cum
+    FROM (
+      SELECT o_orderkey, o_orderpriority, w,
+             CAST(SUM(w) OVER (PARTITION BY o_orderpriority ORDER BY o_orderkey
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                  AS BIGINT) AS cum
+      FROM (SELECT o_orderkey, o_orderpriority,
+                   CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS w
+            FROM orders)
+    )
+    WHERE cum // {_PPS_STEP} > (cum - w) // {_PPS_STEP}
+    ORDER BY o_orderkey
+    """,
+)
+def q_sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted systematic (probability-proportional-to-size) sample:
+    within each priority class, walk orders in key order accumulating
+    integer-cent weights and pick every row whose cumulative weight
+    crosses a $10M boundary — heavier orders are proportionally more
+    likely to straddle a boundary, the PPS property.  All arithmetic
+    is integer (FLOOR(x*100 + 0.5) — the repo's cents discipline: the
+    +0.5 corrects double representation error like 0.29*100→28.999…,
+    and FLOOR before the cast pins the one engine divergence:
+    DuckDB's double→BIGINT cast rounds, Spark's truncates), so the
+    selected set is hash-attested.  The prefix sum is windowed per
+    priority key — bounded partitions, no global sort; an
+    unpartitioned 100 TB stream would range-partition and add
+    per-range offsets (two passes, same arithmetic)."""
+    o = T(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    weighted = o.select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+        .cast("bigint")
+        .alias("w"),
+    ).withColumn("cum", F.sum("w").over(w))
+    return (
+        weighted.filter(F.expr(f"cum DIV {_PPS_STEP} > (cum - w) DIV {_PPS_STEP}"))
+        .select("o_orderkey", "o_orderpriority", "w", "cum")
+        .orderBy("o_orderkey")
+    )
+
+
+# ------------------------------------------------------------------
+# Temperature-scaled source mixture (multilingual data balancing)
+# ------------------------------------------------------------------
+
+_MIX_B = 1 << 20
+
+
+_MIX_ORACLE = f"""
+WITH census AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_total FROM documents
+  GROUP BY source),
+thr AS (
+  SELECT source, n_total,
+         CAST(FLOOR(SQRT(CAST((SELECT MIN(n_total) FROM census) AS DOUBLE)
+                         / n_total) * {_MIX_B}) AS BIGINT) AS threshold
+  FROM census),
+kept AS (
+  SELECT d.source, d.doc_id, d.n_chars, t.n_total, t.threshold
+  FROM documents d JOIN thr t USING (source)
+  WHERE ((d.doc_id % {_MIX_B}) * {KNUTH}) % {_MIX_B} < t.threshold)
+SELECT thr.source, thr.n_total, thr.threshold,
+       CAST(COUNT(kept.doc_id) AS BIGINT) AS n_kept,
+       CAST(COALESCE(SUM(kept.n_chars), 0) AS BIGINT) AS kept_chars
+FROM thr LEFT JOIN kept ON kept.source = thr.source
+GROUP BY thr.source, thr.n_total, thr.threshold
+ORDER BY thr.source
+"""
+
+
+@query("q_mix_temperature", oracle=_MIX_ORACLE)
+def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled source mixture (α = 0.5) — the multilingual /
+    multi-source balancing recipe (sample source s with probability ∝
+    N_s^α, i.e. keep-rate q_s = sqrt(N_min/N_s): the smallest source
+    is kept whole, large sources are downsampled toward the temperature
+    mixture; effective masses become ∝ sqrt(N_s)).  Keep decisions are
+    a pure function of doc_id (Knuth multiplicative hash vs an integer
+    threshold pinned by FLOOR(q_s·2^20)), so the EXACT kept set — not
+    just expected rates — is hash-attested, the q_sample_rebalance
+    discipline with DATA-DERIVED rates instead of config constants.
+
+    Scale: one census agg (4 groups), thresholds broadcast back on the
+    source key, keep test is a map-only integer compare.  The report
+    aggregates per source so the check covers every kept row."""
+    d = T(spark, sf_dir, "documents")
+    census = d.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_total"))
+    thr = census.withColumn(
+        "threshold",
+        F.expr(
+            f"CAST(FLOOR(SQRT(CAST(MIN(n_total) OVER () AS DOUBLE) / n_total)"
+            f" * {_MIX_B}) AS BIGINT)"
+        ),
+    )
+    kept = (
+        d.join(F.broadcast(thr), "source")
+        .where(
+            # doc_id is reduced mod 2^20 BEFORE the Knuth multiply
+            # (congruent result mod 2^20) so the product stays below
+            # 2^52 — a raw doc_id*2654435761 overflows int64 past
+            # ~3.5e9 ids, where DuckDB raises and Spark wraps (ADVICE r8)
+            F.expr(f"((doc_id % {_MIX_B}) * {KNUTH}) % {_MIX_B}")
+            < F.col("threshold")
+        )
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_kept"),
+            F.sum("n_chars").cast("long").alias("kept_chars"),
+        )
+    )
+    return (
+        thr.join(kept, "source", "left")
+        .fillna({"n_kept": 0, "kept_chars": 0})
+        .select("source", "n_total", "threshold", "n_kept", "kept_chars")
+        .orderBy("source")
+    )
+
+
+# ------------------------------------------------------------------
+# Composite quality filter (Gopher/C4-style rule ensemble)
+# ------------------------------------------------------------------
+
+_QUALITY_ORACLE = """
+WITH tok AS (
+  SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS word FROM documents),
+per_word AS (
+  SELECT doc_id, word, COUNT(*) AS c FROM tok GROUP BY doc_id, word),
+sig AS (
+  SELECT doc_id,
+         CAST(SUM(c) AS BIGINT) AS n_words,
+         CAST(COUNT(*) AS BIGINT) AS n_distinct,
+         CAST(SUM(c * STRLEN(word)) AS BIGINT) AS n_letters,
+         CAST(MAX(c) AS BIGINT) AS top_freq
+  FROM per_word GROUP BY doc_id),
+scored AS (
+  SELECT doc_id, n_words,
+         n_distinct * 1000000 // n_words AS distinct_ppm,
+         top_freq * 1000000 // n_words AS top_share_ppm,
+         n_letters * 1000 // n_words AS mean_word_len_milli
+  FROM sig)
+SELECT doc_id, n_words, distinct_ppm, top_share_ppm, mean_word_len_milli,
+       CAST(n_words >= 30 AND distinct_ppm >= 100000
+            AND top_share_ppm <= 300000
+            AND mean_word_len_milli BETWEEN 2000 AND 12000 AS INT) AS keep
+FROM scored ORDER BY doc_id
+"""
+
+
+@query("q_quality_composite", oracle=_QUALITY_ORACLE)
+def q_quality_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composite document-quality filter — the Gopher/C4-style rule
+    ensemble as ONE keep/drop verdict per document: minimum length,
+    type-token (distinct-word) ratio, hottest-word share, and mean
+    word length, every signal an exact integer (ppm / milli by
+    integer division) so both the scorecard and the verdict bit are
+    hash-attested.  This is the decision layer the individual signal
+    queries (q_text_quality, q_text_repetition, q_text_bigram_lm)
+    feed in a production filter chain.
+
+    Scale: one tokenize + two map-side-combined aggregations keyed by
+    doc — no joins, no windows, no Python."""
+    d = T(spark, sf_dir, "documents")
+    per_word = (
+        d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+        .groupBy("doc_id", "word")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    sig = per_word.groupBy("doc_id").agg(
+        F.sum("c").cast("long").alias("n_words"),
+        F.count(F.lit(1)).cast("long").alias("n_distinct"),
+        F.sum(F.col("c") * F.length("word")).cast("long").alias("n_letters"),
+        F.max("c").cast("long").alias("top_freq"),
+    )
+    scored = sig.select(
+        "doc_id",
+        "n_words",
+        F.expr("n_distinct * 1000000 DIV n_words").alias("distinct_ppm"),
+        F.expr("top_freq * 1000000 DIV n_words").alias("top_share_ppm"),
+        F.expr("n_letters * 1000 DIV n_words").alias("mean_word_len_milli"),
+    )
+    return scored.select(
+        "*",
+        F.expr(
+            "CAST(n_words >= 30 AND distinct_ppm >= 100000"
+            " AND top_share_ppm <= 300000"
+            " AND mean_word_len_milli BETWEEN 2000 AND 12000 AS INT)"
+        ).alias("keep"),
+    ).orderBy("doc_id")
+
+
+# ------------------------------------------------------------------
+# Source-mixture entropy (floor-log2 half-bit surprisal)
+# ------------------------------------------------------------------
+
+_ENT_ORACLE = f"""
+WITH c AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+  FROM documents GROUP BY source),
+t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM c),
+s AS (
+  SELECT c.source, c.n_docs, t.total,
+         2 * (({blen_ladder('t.total')}) - ({blen_ladder('c.n_docs')})) + 1
+           AS surprisal_halfbits
+  FROM c, t)
+SELECT source, n_docs, total, CAST(surprisal_halfbits AS BIGINT)
+         AS surprisal_halfbits,
+       CAST(n_docs * surprisal_halfbits AS BIGINT) AS cost_halfbits
+FROM s ORDER BY source
+"""
+
+
+@query("q_mix_entropy", oracle=_ENT_ORACLE)
+def q_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Source-mixture entropy census: each source's quantized
+    surprisal −log₂(n/N) as the integer half-bit cost
+    2·(blen(N) − blen(n)) + 1 (the q_text_bigram_lm discipline) and
+    its n·surprisal contribution — Σcost/N is the mixture entropy a
+    data-mix monitor alarms on when one source starts dominating
+    (entropy → 0) after a bad refresh.  Exact int64 end-to-end; the
+    bit-length is a CASE ladder, not an interpreted HOF.
+
+    Scale: one map-side-combined source census (≤ dozens of groups),
+    then per-group scalar algebra against the 1-row total."""
+    d = T(spark, sf_dir, "documents")
+    c = d.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    )
+    t = c.agg(F.sum("n_docs").cast("long").alias("total"))
+    s = c.crossJoin(F.broadcast(t)).select(
+        "source",
+        "n_docs",
+        "total",
+        F.expr(
+            f"CAST(2 * (({blen_ladder('total')}) - ({blen_ladder('n_docs')}))"
+            " + 1 AS BIGINT)"
+        ).alias("surprisal_halfbits"),
+    )
+    return s.select(
+        "source",
+        "n_docs",
+        "total",
+        "surprisal_halfbits",
+        (F.col("n_docs") * F.col("surprisal_halfbits"))
+        .cast("long")
+        .alias("cost_halfbits"),
+    ).orderBy("source")
+
+
+# ------------------------------------------------------------------
+# Target-mixture upsample plan (pinned target weights)
+# ------------------------------------------------------------------
+
+#: pinned target mixture in ppm (sums to 1,000,000) — the plan every
+#: LLM-data run starts from; sources absent from the corpus get no row
+#: (they cannot be sampled into existence), extra corpus sources get
+#: target 0.
+_MIX_TARGETS = {
+    "src0": 300000,
+    "src1": 200000,
+    "src2": 150000,
+    "src3": 100000,
+    "src4": 100000,
+    "src5": 50000,
+    "src6": 50000,
+    "src7": 50000,
+}
+
+
+_MIX_CASES = " ".join(
+    f"WHEN source = '{s}' THEN {t}" for s, t in sorted(_MIX_TARGETS.items())
+)
+
+
+_PLAN_ORACLE = f"""
+WITH c AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+  FROM documents GROUP BY source),
+t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM c),
+p AS (
+  SELECT c.source, c.n_docs, t.total,
+         CAST(CASE {_MIX_CASES} ELSE 0 END AS BIGINT) AS target_ppm
+  FROM c, t)
+SELECT source, n_docs, target_ppm,
+       CAST(target_ppm * total // n_docs AS BIGINT) AS factor_ppm,
+       CASE WHEN target_ppm * total > 1000000 * n_docs THEN 1 ELSE 0 END
+         AS needs_upsample
+FROM p ORDER BY source
+"""
+
+
+@query("q_mix_upsample_plan", oracle=_PLAN_ORACLE)
+def q_mix_upsample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sampling-factor plan to hit a pinned target source mixture:
+    factor = target_share·N / nᵢ (in ppm — 1,000,000 = keep as is,
+    less = downsample, more = repeat/upsample), with the
+    needs_upsample flag as an exact cross-multiplied comparison.
+    This is the PLANNING census a mixture run consults before
+    q_mix_temperature/q_mix_sources executes it; the epoch bound is
+    max factor over the must-not-repeat sources.
+
+    Scale: one source census (≤ dozens of groups) against the 1-row
+    corpus total — map-side combined, scalar algebra after."""
+    d = T(spark, sf_dir, "documents")
+    c = d.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    )
+    t = c.agg(F.sum("n_docs").cast("long").alias("total"))
+    p = c.crossJoin(F.broadcast(t)).select(
+        "source",
+        "n_docs",
+        F.expr(f"CAST(CASE {_MIX_CASES} ELSE 0 END AS BIGINT)").alias(
+            "target_ppm"
+        ),
+        "total",
+    )
+    return p.select(
+        "source",
+        "n_docs",
+        "target_ppm",
+        F.expr("CAST(target_ppm * total DIV n_docs AS BIGINT)").alias(
+            "factor_ppm"
+        ),
+        F.when(
+            F.col("target_ppm") * F.col("total")
+            > 1000000 * F.col("n_docs"),
+            1,
+        )
+        .otherwise(0)
+        .alias("needs_upsample"),
+    ).orderBy("source")
+
+
+# ------------------------------------------------------------------
+# Referential-integrity audit across the star schema
+# ------------------------------------------------------------------
+
+_FK_ORACLE = """
+SELECT * FROM (
+  SELECT 'orders.o_custkey->customer' AS fk,
+         CAST((SELECT COUNT(*) FROM orders o
+               WHERE NOT EXISTS (SELECT 1 FROM customer c
+                                 WHERE c.c_custkey = o.o_custkey))
+              AS BIGINT) AS orphan_rows,
+         CAST((SELECT COUNT(DISTINCT o_custkey) FROM orders o
+               WHERE NOT EXISTS (SELECT 1 FROM customer c
+                                 WHERE c.c_custkey = o.o_custkey))
+              AS BIGINT) AS dangling_keys
+  UNION ALL
+  SELECT 'lineitem.l_orderkey->orders',
+         CAST((SELECT COUNT(*) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM orders o
+                                 WHERE o.o_orderkey = l.l_orderkey))
+              AS BIGINT),
+         CAST((SELECT COUNT(DISTINCT l_orderkey) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM orders o
+                                 WHERE o.o_orderkey = l.l_orderkey))
+              AS BIGINT)
+  UNION ALL
+  SELECT 'lineitem.l_partkey->part',
+         CAST((SELECT COUNT(*) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM part p
+                                 WHERE p.p_partkey = l.l_partkey))
+              AS BIGINT),
+         CAST((SELECT COUNT(DISTINCT l_partkey) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM part p
+                                 WHERE p.p_partkey = l.l_partkey))
+              AS BIGINT)
+  UNION ALL
+  SELECT 'lineitem.l_suppkey->supplier',
+         CAST((SELECT COUNT(*) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM supplier s
+                                 WHERE s.s_suppkey = l.l_suppkey))
+              AS BIGINT),
+         CAST((SELECT COUNT(DISTINCT l_suppkey) FROM lineitem l
+               WHERE NOT EXISTS (SELECT 1 FROM supplier s
+                                 WHERE s.s_suppkey = l.l_suppkey))
+              AS BIGINT)
+) ORDER BY fk
+"""
+
+
+@query("q_validate_fk", oracle=_FK_ORACLE)
+def q_validate_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Referential-integrity audit: orphaned-row and dangling-key
+    counts for the star schema's four foreign keys, via LEFT ANTI
+    joins — the data-quality gate a warehouse runs after every load
+    (q_validate_constraints checks per-column invariants; this checks
+    the RELATIONSHIPS).  Zeros everywhere on the generator's
+    consistent data; the query's value is the shape.
+
+    Scale: each relationship is one anti-join where the dimension
+    side broadcasts (customer/part/supplier) or shuffles on the
+    already-co-partitioned key (orders→lineitem); counts are exact."""
+    def audit(fact, fk_col, dim, pk_col, label):
+        orphans = fact.join(
+            dim.select(F.col(pk_col).alias(fk_col)), fk_col, "left_anti"
+        )
+        return orphans.agg(
+            F.lit(label).alias("fk"),
+            F.count(F.lit(1)).cast("long").alias("orphan_rows"),
+            F.countDistinct(fk_col).cast("long").alias("dangling_keys"),
+        ).select("fk", "orphan_rows", "dangling_keys")
+
+    o = T(spark, sf_dir, "orders")
+    li = T(spark, sf_dir, "lineitem")
+    parts = [
+        audit(o, "o_custkey", T(spark, sf_dir, "customer"), "c_custkey",
+              "orders.o_custkey->customer"),
+        audit(li, "l_orderkey", o, "o_orderkey",
+              "lineitem.l_orderkey->orders"),
+        audit(li, "l_partkey", T(spark, sf_dir, "part"), "p_partkey",
+              "lineitem.l_partkey->part"),
+        audit(li, "l_suppkey", T(spark, sf_dir, "supplier"), "s_suppkey",
+              "lineitem.l_suppkey->supplier"),
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out.orderBy("fk")

@@ -40,9 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import INT8_CODES, O_INT8_CODES
 from ..registry import query
 from ..sources.tables import table as T
-from .ann_xengine import _CODES_SPARK, _CODES_SQL
 
 _DIM = 64
 _M = 8          # subspaces
@@ -52,7 +52,7 @@ _TOPK = 10
 
 _PQ_ORACLE = f"""
 WITH cod AS (
-  SELECT vec_id, {_CODES_SQL} AS codes FROM embeddings),
+  SELECT vec_id, {O_INT8_CODES} AS codes FROM embeddings),
 anch AS (
   SELECT vec_id AS c, codes FROM cod WHERE vec_id < {_K}),
 q AS (
@@ -100,7 +100,7 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted so the driver check also attests the re-rank input the
     production path would use on the short-list."""
     e = T(spark, sf_dir, "embeddings")
-    cod = e.select("vec_id", F.expr(_CODES_SPARK).alias("codes"))
+    cod = e.select("vec_id", F.expr(INT8_CODES).alias("codes"))
 
     # bounded driver-side collect (K anchors incl. the query vector) —
     # the per-query ADC table build; same boundedness argument as the

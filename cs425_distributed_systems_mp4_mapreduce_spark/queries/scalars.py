@@ -229,3 +229,164 @@ def q_scalar_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("segment")
     )
+
+
+@query(
+    "q_scalar_variant",
+    oracle="""
+    SELECT event_type,
+           COUNT(*) AS n,
+           CAST(MIN(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+             AS min_k,
+           CAST(MAX(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+             AS max_k,
+           CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+             AS sum_k
+    FROM events GROUP BY event_type ORDER BY event_type
+    """,
+)
+def q_scalar_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured VARIANT surface (Spark 4): parse the events
+    ``props`` JSON into the binary VARIANT type once, then extract
+    typed paths with variant_get — the open-schema ingestion pattern
+    (store first, type at query time) that replaces brittle
+    get_json_object string re-parsing.  VARIANT keeps a parsed binary
+    form, so repeated path extraction does not re-tokenize the JSON —
+    at 100 TB the parse happens once per row, not once per accessed
+    field.  Oracle extracts the same path with DuckDB's JSON reader."""
+    e = T(spark, sf_dir, "events")
+    k = F.expr("variant_get(parse_json(props), '$.k', 'long')")
+    return (
+        e.select("event_type", k.alias("k"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("k").alias("min_k"),
+            F.max("k").alias("max_k"),
+            F.sum("k").alias("sum_k"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# ------------------------------------------------------------------
+# URL canonicalization census
+# ------------------------------------------------------------------
+
+#: deterministic synthetic URL per document (the corpus carries no
+#: URL column): scheme and tracking query vary by doc_id so the
+#: normalization has real work to do.
+_URL_EXPR_SQL = (
+    "CASE WHEN doc_id % 3 = 0 THEN 'HTTPS' ELSE 'http' END"
+    " || '://WWW.' || source || '.Example.COM/' || lang"
+    " || '/doc-' || CAST(doc_id AS VARCHAR)"
+    " || CASE WHEN doc_id % 2 = 0"
+    "    THEN '?utm_source=feed&session=' || CAST(doc_id AS VARCHAR)"
+    "    ELSE '' END"
+)
+
+
+_URL_EXPR_SPARK = (
+    "CASE WHEN doc_id % 3 = 0 THEN 'HTTPS' ELSE 'http' END"
+    " || '://WWW.' || source || '.Example.COM/' || lang"
+    " || '/doc-' || CAST(doc_id AS STRING)"
+    " || CASE WHEN doc_id % 2 = 0"
+    "    THEN '?utm_source=feed&session=' || CAST(doc_id AS STRING)"
+    "    ELSE '' END"
+)
+
+
+#: regexp parsing shared by both engines: scheme, host, path, query
+_URL_HOST_RE = "^[a-zA-Z]+://([^/?]+)"
+
+
+_URL_PATH_RE = "^[a-zA-Z]+://[^/?]+(/[^?]*)"
+
+
+_URL_ORACLE = f"""
+WITH u AS (
+  SELECT doc_id, {_URL_EXPR_SQL} AS url FROM documents),
+parsed AS (
+  SELECT doc_id,
+         lower(regexp_extract(url, '{_URL_HOST_RE}', 1)) AS host,
+         regexp_extract(url, '{_URL_PATH_RE}', 1) AS path,
+         CASE WHEN url LIKE '%?%' THEN 1 ELSE 0 END AS had_query
+  FROM u),
+canon AS (
+  SELECT CASE WHEN host LIKE 'www.%' THEN substr(host, 5) ELSE host END
+           AS chost,
+         had_query
+  FROM parsed)
+SELECT chost AS host,
+       CAST(COUNT(*) AS BIGINT) AS n_urls,
+       CAST(SUM(had_query) AS BIGINT) AS n_with_query
+FROM canon GROUP BY 1 ORDER BY 1
+"""
+
+
+@query("q_scalar_url", oracle=_URL_ORACLE)
+def q_scalar_url(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL canonicalization census — the normalization every
+    web-crawl dedup runs before hashing keys: lowercase the host,
+    strip the www. prefix, detect (and in the canonical key, drop)
+    tracking query strings.  Parsing is shared REGEXP on both engines
+    (Spark's parse_url has no DuckDB twin — the portable-idiom rule
+    that picked md5-prefix over murmur3); URLs are synthesized
+    deterministically from document columns, mixed-case and
+    tracking-parameter pollution included.
+
+    Scale: map-only string expressions into a host-bounded census —
+    no shuffle wider than the host domain."""
+    d = T(spark, sf_dir, "documents")
+    u = d.select("doc_id", F.expr(_URL_EXPR_SPARK).alias("url"))
+    parsed = u.select(
+        F.expr(f"lower(regexp_extract(url, '{_URL_HOST_RE}', 1))").alias(
+            "host"
+        ),
+        F.expr(
+            "CASE WHEN url LIKE '%?%' THEN 1 ELSE 0 END"
+        ).alias("had_query"),
+    )
+    canon = parsed.select(
+        F.expr(
+            "CASE WHEN host LIKE 'www.%' THEN substr(host, 5) ELSE host END"
+        ).alias("host"),
+        "had_query",
+    )
+    return (
+        canon.groupBy("host")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_urls"),
+            F.sum("had_query").cast("long").alias("n_with_query"),
+        )
+        .orderBy("host")
+    )
+
+
+@query(
+    "q_scalar_posexplode",
+    oracle="""
+    WITH toks AS (
+      SELECT doc_id, string_split(text, ' ') AS t
+      FROM documents WHERE doc_id % 100 = 0
+    )
+    SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, t[i] AS word
+    FROM toks,
+         LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) u
+    ORDER BY doc_id, pos
+    """,
+)
+def q_scalar_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """posexplode (ordinality-preserving expansion): token position is
+    part of the output — what plain explode (and the wordcount UDTF)
+    discards, and what sequence/attention features need.  Generator
+    projection, no shuffle."""
+    d = T(spark, sf_dir, "documents").filter(F.expr("doc_id % 100 = 0"))
+    return (
+        d.select(
+            "doc_id",
+            F.posexplode(F.split("text", " ")).alias("pos", "word"),
+        )
+        .select("doc_id", F.col("pos").cast("long").alias("pos"), "word")
+        .orderBy("doc_id", "pos")
+    )

@@ -17,6 +17,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.parity import dsum, o_dsum
 from ..registry import query
@@ -532,3 +533,103 @@ def q_source_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
+
+
+@query(
+    "q_source_python",
+    oracle="""
+    WITH src AS (
+      SELECT i AS event_id,
+             (1103515245 * i + 12345) % 2147483648 AS h,
+             CASE i % 5 WHEN 0 THEN 'click' WHEN 1 THEN 'view'
+                        WHEN 2 THEN 'signup' WHEN 3 THEN 'purchase'
+                        ELSE 'error' END AS etype
+      FROM generate_series(0, 9999) t(i)
+    )
+    SELECT etype, COUNT(*) AS n,
+           COUNT(DISTINCT h % 50) AS n_users,
+           {sv}
+    FROM (SELECT etype, h, (h % 10000) / 100.0 AS value FROM src)
+    GROUP BY etype ORDER BY etype
+    """.format(sv=o_dsum("value", "sum_value")),
+)
+def q_source_python(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom source via the Python DataSource API (Spark 4): register
+    a pure-Python partition-parallel source and aggregate its output.
+    The source (sources/pydatasource.py) generates rows from
+    deterministic integer arithmetic, so the ENTIRE read path —
+    option parsing, partition planning (8 splits, reads parallelize
+    like any scan), per-partition generators, Arrow transport — is
+    verified by exact value hash against a DuckDB generate_series
+    twin, not just a row count.  ``sf_dir`` is unused: the source IS
+    the data; row count is fixed so the oracle matches at every SF."""
+    from ..sources.pydatasource import SyntheticEventsDataSource
+
+    spark.dataSource.register(SyntheticEventsDataSource)
+    src = (
+        spark.read.format("synthetic_events")
+        .option("rows", "10000")
+        .option("partitions", "8")
+        .load()
+    )
+    return (
+        src.groupBy("etype")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("user_id").alias("n_users"),
+            dsum("value", "sum_value"),
+        )
+        .orderBy("etype")
+    )
+
+
+@query(
+    "q_source_snapshot",
+    oracle="""
+    SELECT 'v0' AS snap, o_orderstatus, COUNT(*) AS n_orders, {rev0}
+    FROM orders WHERE o_orderdate < DATE '1995-01-01'
+    GROUP BY o_orderstatus
+    UNION ALL
+    SELECT 'v1' AS snap, o_orderstatus, COUNT(*) AS n_orders, {rev1}
+    FROM orders
+    GROUP BY o_orderstatus
+    ORDER BY snap, o_orderstatus
+    """.format(
+        rev0=o_dsum("o_totalprice", "revenue"),
+        rev1=o_dsum("o_totalprice", "revenue"),
+    ),
+)
+def q_source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Versioned snapshot source (time travel): two copy-on-write
+    snapshots of orders land under hive dirs v=0 (loads before
+    1995) and v=1 (everything); an as-of read is `filter(v == N)`
+    and costs exactly one version's scan via partition pruning.
+    The query reads BOTH versions back through the snapshot layout
+    and aggregates each; the oracle recomputes the same aggregates
+    from the source table, so any row lost, duplicated, or
+    mis-filed between versions breaks the hash.
+
+    Scale: each version is a complete snapshot under a hive partition
+    dir ``v=N``; an as-of read is a partition filter, so time travel
+    costs ONE directory's scan (partition pruning, pinned in
+    tests/test_plans_r7.py) however many versions exist."""
+    o = T(spark, sf_dir, "orders")
+    path = sink_path(sf_dir, "orders_snapshots")
+    v0 = o.filter(F.col("o_orderdate") < F.lit("1995-01-01").cast("date"))
+    v0.write.mode("overwrite").parquet(f"{path}/v=0")
+    o.write.mode("overwrite").parquet(f"{path}/v=1")
+
+    snap = spark.read.parquet(path)  # hive-partition column `v`
+
+    def as_of(version: int, tag: str) -> DataFrame:
+        return (
+            snap.filter(F.col("v") == version)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                dsum("o_totalprice", "revenue"),
+            )
+            .select(F.lit(tag).alias("snap"), "o_orderstatus", "n_orders", "revenue")
+        )
+
+    return as_of(0, "v0").unionByName(as_of(1, "v1")).orderBy("snap", "o_orderstatus")

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..sources.derived import US_PER_DAY, events_us
 from ..sources.tables import table as T
 
 #: count-min geometry: d hash rows × W buckets.  W is sized so ε =
@@ -446,4 +447,416 @@ def q_topk_frequent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("k").alias("user_id"), F.col("est").alias("est_events"))
         .orderBy(F.desc("est_events"), "user_id")
         .limit(20)
+    )
+
+
+@query("q_sketch_hll_merge")  # rows-only: see ROWS_ONLY.md
+def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable distinct-count sketches (Apache DataSketches HLL via
+    hll_sketch_agg): per-day user sketches union-merged into a global
+    estimate — THE re-aggregation primitive at 100 TB, where "distinct
+    users this month" must come from merging 30 daily sketches, not
+    re-scanning a month of raw events.  Emits per-day estimates plus a
+    merged ALL row (day = -1).
+
+    Rows-only by necessity (estimates are implementation-defined;
+    DuckDB's HLL is not bit-compatible); the property that MATTERS —
+    merge losslessness, union(daily sketches) == sketch(whole stream),
+    exactly — is asserted in tests/test_llm_ops.py, as is estimate
+    accuracy against the exact twin (q_agg_distinct_users family)."""
+    e = events_us(spark, sf_dir).select(
+        F.expr(f"ts_us DIV {US_PER_DAY}").alias("day"), "user_id"
+    )
+    daily = e.groupBy("day").agg(
+        F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
+    )
+    per_day = daily.select(
+        "day", F.expr("hll_sketch_estimate(sk)").alias("n_users_est")
+    )
+    merged = daily.agg(
+        F.expr(
+            "hll_sketch_estimate(hll_union_agg(sk, false))"
+        ).alias("n_users_est")
+    ).select(F.lit(-1).cast("long").alias("day"), "n_users_est")
+    return per_day.unionByName(merged).orderBy("day")
+
+
+# ------------------------------------------------------------------
+# Bloom filter — mergeable membership sketch, fully hash-proven
+# ------------------------------------------------------------------
+
+#: cross-engine hash (queries/sketches.py provenance: two affine
+#: rounds mod the Mersenne prime interleaved with xor-shift folds)
+
+_B_A1, _B_B1 = 1104335282, 747730126
+
+
+_B_A2, _B_B2 = 1342251277, 578033794
+
+
+#: filter geometry: 4096 bits as 62-bit words (62, not 64, so
+#: 1 << bit never touches the int64 sign bit on either engine);
+#: k = 3 probes by Kirsch-Mitzenmacher double hashing.
+_BLOOM_BITS = 4096
+
+
+_BLOOM_WORD = 62
+
+
+_BLOOM_K = 3
+
+
+def _xe_sql(expr: str) -> str:
+    return (
+        f"xor((({_B_A2} * xor((({_B_A1} * ({expr}) + {_B_B1}) % {_XE_P}),"
+        f" (({_B_A1} * ({expr}) + {_B_B1}) % {_XE_P}) >> 15) + {_B_B2})"
+        f" % {_XE_P}),"
+        f" (({_B_A2} * xor((({_B_A1} * ({expr}) + {_B_B1}) % {_XE_P}),"
+        f" (({_B_A1} * ({expr}) + {_B_B1}) % {_XE_P}) >> 15) + {_B_B2})"
+        f" % {_XE_P}) >> 13)"
+    )
+
+
+def _xe_spark(col):
+    h1 = F.pmod(F.lit(_B_A1) * col + F.lit(_B_B1), F.lit(_XE_P))
+    h2 = h1.bitwiseXOR(F.shiftright(h1, 15))
+    h3 = F.pmod(F.lit(_B_A2) * h2 + F.lit(_B_B2), F.lit(_XE_P))
+    return h3.bitwiseXOR(F.shiftright(h3, 13))
+
+
+_BLOOM_ORACLE = f"""
+WITH members AS (SELECT DISTINCT o_custkey AS k FROM orders),
+hk AS (
+  SELECT k, {_xe_sql('k')} AS hv, {_xe_sql('k + 1000000007')} AS hv2
+  FROM members),
+pos AS (
+  SELECT k, ((hv + i * hv2) % {_BLOOM_BITS}) AS p
+  FROM hk, range({_BLOOM_K}) t(i)),
+words AS (
+  SELECT p // {_BLOOM_WORD} AS word,
+         CAST(bit_or(1::BIGINT << (p % {_BLOOM_WORD})) AS BIGINT) AS bits
+  FROM pos GROUP BY 1),
+cand AS (
+  SELECT c_custkey AS k FROM customer
+  UNION ALL
+  SELECT c_custkey + 50000000 FROM customer),
+probes AS (
+  SELECT cand.k,
+         CASE WHEN m.k IS NULL THEN 0 ELSE 1 END AS is_member
+  FROM cand LEFT JOIN members m ON m.k = cand.k),
+ph AS (
+  SELECT k, is_member, {_xe_sql('k')} AS hv,
+         {_xe_sql('k + 1000000007')} AS hv2
+  FROM probes),
+ppos AS (
+  SELECT k, is_member, ((hv + i * hv2) % {_BLOOM_BITS}) AS p
+  FROM ph, range({_BLOOM_K}) t(i)),
+tested AS (
+  SELECT ppos.k, ppos.is_member,
+         CAST(SUM(CASE WHEN (COALESCE(w.bits, 0)
+                             & (1::BIGINT << (ppos.p % {_BLOOM_WORD})))
+                       <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS hits
+  FROM ppos LEFT JOIN words w ON w.word = ppos.p // {_BLOOM_WORD}
+  GROUP BY ppos.k, ppos.is_member)
+SELECT CAST(SUM(is_member) AS BIGINT) AS n_members,
+       CAST(SUM(1 - is_member) AS BIGINT) AS n_nonmembers,
+       CAST(SUM(CASE WHEN is_member = 1 AND hits < {_BLOOM_K}
+                THEN 1 ELSE 0 END) AS BIGINT) AS false_negatives,
+       CAST(SUM(CASE WHEN is_member = 0 AND hits = {_BLOOM_K}
+                THEN 1 ELSE 0 END) AS BIGINT) AS false_positives
+FROM tested
+"""
+
+
+@query("q_sketch_bloom_xengine", oracle=_BLOOM_ORACLE)
+def q_sketch_bloom_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fully-oracled BLOOM FILTER twin — the membership sketch behind
+    q_join_bloom_pruned's runtime pruning, here built from first
+    principles so the algebra is hash-proven: members = custkeys with
+    orders; the probe set is every customer key plus a shifted
+    guaranteed-non-member cohort (so the false-positive measurement
+    is never vacuous); 3 bit positions per key by Kirsch-Mitzenmacher
+    double hashing over the cross-engine hash; the filter is 4096 bits
+    packed into 62-bit words by a bit_or aggregation (62 so the shift
+    never reaches the sign bit on either engine).  Every customer key
+    then probes the filter: members MUST all hit (false_negatives is
+    the in-query zero-FN theorem, hash-attested), and the measured
+    false-positive count on true non-members is the sketch's only
+    approximation — deterministic, so it hash-matches too (and lands
+    on theory: at sf0.01 the filter holds n=1500 keys * k=3 bits in
+    m=4096 -> (1-e^(-kn/m))^k ~ 0.30 predicted, 469/1500 = 0.31
+    measured; production sizes m ~ 10n*k for ~1% FPR — the geometry
+    is a constant, the algebra is what the hash proves).
+
+    Scale: the filter state is {_BLOOM_BITS // _BLOOM_WORD + 1} words
+    TOTAL, built by one map-side-combining bit_or agg (mergeable by
+    OR across shards/days — the re-aggregation primitive) and
+    broadcast to the probe side; probe cost is a map-only bit test."""
+    o = T(spark, sf_dir, "orders")
+    c = T(spark, sf_dir, "customer")
+    members = o.select(F.col("o_custkey").alias("k")).distinct()
+    i_arr = F.array(*[F.lit(i) for i in range(_BLOOM_K)])
+
+    def positions(df):
+        return df.select(
+            "*",
+            _xe_spark(F.col("k")).alias("hv"),
+            _xe_spark(F.col("k") + F.lit(1000000007)).alias("hv2"),
+        ).select(
+            "*",
+            F.explode(i_arr).alias("i"),
+        ).withColumn("p", F.pmod(F.col("hv") + F.col("i") * F.col("hv2"), F.lit(_BLOOM_BITS)))
+
+    words = (
+        positions(members)
+        .groupBy(F.expr(f"p DIV {_BLOOM_WORD}").alias("word"))
+        .agg(
+            F.expr(
+                f"CAST(bit_or(shiftleft(1L, CAST(p % {_BLOOM_WORD} AS INT)))"
+                f" AS BIGINT)"
+            ).alias("bits")
+        )
+    )
+    cand = c.select(F.col("c_custkey").alias("k")).unionAll(
+        c.select((F.col("c_custkey") + F.lit(50000000)).alias("k"))
+    )
+    probes = cand.join(
+        members.withColumn("is_member", F.lit(1)), "k", "left"
+    ).fillna({"is_member": 0})
+    tested = (
+        positions(probes)
+        .withColumn("word", F.expr(f"p DIV {_BLOOM_WORD}"))
+        # LEFT join: a probe whose word has no set bits anywhere must
+        # still contribute a (miss) row, or n_nonmembers / the FPR
+        # denominator silently undercount (ADVICE r8)
+        .join(F.broadcast(words), "word", "left")
+        .withColumn(
+            "hit",
+            F.expr(
+                f"CAST((coalesce(bits, 0L) & "
+                f"shiftleft(1L, CAST(p % {_BLOOM_WORD} AS INT)))"
+                f" <> 0 AS INT)"
+            ),
+        )
+        .groupBy("k", "is_member")
+        .agg(F.sum("hit").cast("long").alias("hits"))
+    )
+    return tested.agg(
+        F.sum("is_member").cast("long").alias("n_members"),
+        F.sum(1 - F.col("is_member")).cast("long").alias("n_nonmembers"),
+        F.sum(
+            F.when((F.col("is_member") == 1) & (F.col("hits") < _BLOOM_K), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("false_negatives"),
+        F.sum(
+            F.when((F.col("is_member") == 0) & (F.col("hits") == _BLOOM_K), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("false_positives"),
+    )
+
+
+# ------------------------------------------------------------------
+# KMV (k minimum values) distinct sketch — fully hash-proven
+# ------------------------------------------------------------------
+
+_KMV_K = 64
+
+
+_KMV_ORACLE = f"""
+WITH keys AS (SELECT DISTINCT o_custkey AS k FROM orders),
+h AS (SELECT k, {_xe_sql('k')} AS hv FROM keys),
+dh AS (SELECT DISTINCT hv FROM h),
+kth AS (
+  SELECT CAST(hv AS BIGINT) AS kth_min FROM dh
+  ORDER BY hv LIMIT 1 OFFSET {_KMV_K - 1}),
+halves AS (
+  SELECT hv, hv % 2 AS half FROM dh),
+ka AS (SELECT hv FROM halves WHERE half = 0 ORDER BY hv LIMIT {_KMV_K}),
+kb AS (SELECT hv FROM halves WHERE half = 1 ORDER BY hv LIMIT {_KMV_K}),
+merged AS (
+  SELECT CAST(hv AS BIGINT) AS kth_merged FROM
+  (SELECT hv FROM ka UNION ALL SELECT hv FROM kb) u
+  ORDER BY hv LIMIT 1 OFFSET {_KMV_K - 1})
+SELECT (SELECT COUNT(*) FROM keys) AS n_exact,
+       kth.kth_min,
+       ROUND(({_KMV_K} - 1) * {_XE_P}.0 / kth.kth_min, 4) AS est,
+       ROUND(({_KMV_K} - 1) * {_XE_P}.0 / merged.kth_merged, 4) AS est_merged
+FROM kth, merged
+"""
+
+
+@query("q_sketch_kmv_xengine", oracle=_KMV_ORACLE)
+def q_sketch_kmv_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fully-oracled KMV (k-minimum-values / bottom-k) distinct-count
+    sketch — the third mergeable cardinality structure beside the HLL
+    twin and the exact bitmap: keep the {_KMV_K} smallest distinct
+    hash values; est = (k−1)·P / kth_min (Bar-Yossef et al. 2002).
+    The merge theorem is demonstrated in-query: bottom-k of each
+    hash-parity half, unioned, re-bottom-k'd, must reproduce the
+    global bottom-k (set identity) — est_merged hash-matches est's
+    inputs.  The estimate's division is one int→double op on
+    hash-attested integers, so all four columns match bit-for-bit.
+
+    Scale: sketch state is k values TOTAL; the bottom-k is
+    TakeOrderedAndProject (per-partition heaps, no global sort);
+    merge = union + re-heap, the re-aggregation primitive."""
+    o = T(spark, sf_dir, "orders")
+    keys = o.select(F.col("o_custkey").alias("k")).distinct()
+    dh = keys.select(_xe_spark(F.col("k")).alias("hv")).distinct()
+    # Degenerate-input guard (ADVICE r8): with fewer than k distinct
+    # hashes the DuckDB oracle's OFFSET k-1 yields ZERO rows; a bare
+    # limit(k).agg(max) here would still emit one (wrong) row.  Keep
+    # the kth row only when the bottom-k is actually full, so both
+    # engines agree on tiny corpora (n >= k is the sketch's stated
+    # precondition; below it the report is empty by construction).
+    kth = (
+        dh.orderBy("hv")
+        .limit(_KMV_K)
+        .agg(
+            F.max("hv").cast("long").alias("kth_min"),
+            F.count(F.lit(1)).alias("_n"),
+        )
+        .where(F.col("_n") == _KMV_K)
+        .select("kth_min")
+    )
+    ka = dh.where(F.pmod(F.col("hv"), F.lit(2)) == 0).orderBy("hv").limit(_KMV_K)
+    kb = dh.where(F.pmod(F.col("hv"), F.lit(2)) == 1).orderBy("hv").limit(_KMV_K)
+    merged = (
+        ka.unionAll(kb)
+        .orderBy("hv")
+        .limit(_KMV_K)
+        .agg(
+            F.max("hv").cast("long").alias("kth_merged"),
+            F.count(F.lit(1)).alias("_n"),
+        )
+        .where(F.col("_n") == _KMV_K)
+        .select("kth_merged")
+    )
+    n_exact = keys.agg(F.count(F.lit(1)).alias("n_exact"))
+    return (
+        n_exact.crossJoin(kth)
+        .crossJoin(merged)
+        .select(
+            "n_exact",
+            "kth_min",
+            F.round(
+                F.lit(float(_KMV_K - 1)) * F.lit(float(_XE_P)) / F.col("kth_min"), 4
+            ).alias("est"),
+            F.round(
+                F.lit(float(_KMV_K - 1)) * F.lit(float(_XE_P)) / F.col("kth_merged"),
+                4,
+            ).alias("est_merged"),
+        )
+    )
+
+
+# ------------------------------------------------------------------
+# AMS F2 sketch with exact twin
+# ------------------------------------------------------------------
+
+_AMS_COPIES = 8
+
+
+_AMS_HASH_SQL = (
+    "CAST(('0x' || substr(md5(term || '#' || CAST(seed AS VARCHAR)),"
+    " 1, 15)) AS BIGINT)"
+)
+
+
+_AMS_HASH_SPARK = (
+    "CAST(conv(substring(md5(concat(term, '#', CAST(seed AS STRING))),"
+    " 1, 15), 16, 10) AS BIGINT)"
+)
+
+
+_AMS_ORACLE = f"""
+WITH c AS (
+  SELECT u.term, CAST(COUNT(*) AS BIGINT) AS f
+  FROM documents, UNNEST(string_split(text, ' ')) AS u(term)
+  WHERE u.term <> '' GROUP BY 1),
+signs AS (
+  SELECT c.term, c.f, s.seed,
+         CASE WHEN {_AMS_HASH_SQL} % 2 = 0 THEN 1 ELSE -1 END AS sgn
+  FROM c CROSS JOIN (SELECT UNNEST(range(0, {_AMS_COPIES})) AS seed) s),
+sk AS (
+  SELECT seed, CAST(SUM(f * sgn) AS BIGINT) AS x
+  FROM signs GROUP BY seed),
+est AS (
+  SELECT CAST(SUM(x * x) // {_AMS_COPIES} AS BIGINT) AS est_mean,
+         CAST(MIN(x * x) AS BIGINT) AS est_min,
+         CAST(MAX(x * x) AS BIGINT) AS est_max
+  FROM sk),
+exact AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
+         CAST(SUM(f * f) AS BIGINT) AS f2_exact
+  FROM c)
+SELECT e.n_terms, e.f2_exact, s.est_mean, s.est_min, s.est_max,
+       CAST(CASE WHEN e.f2_exact = 0 THEN NULL
+            ELSE (1000000 * s.est_mean) // e.f2_exact END AS BIGINT)
+         AS ratio_ppm
+FROM exact e CROSS JOIN est s
+"""
+
+
+@query("q_sketch_ams_f2", oracle=_AMS_ORACLE)
+def q_sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AMS (Alon-Matias-Szegedy) second-frequency-moment sketch from
+    first principles: 8 estimator copies, ±1 signs from the parity of
+    the portable md5-prefix hash of (term, seed), each copy's X =
+    Σ f(term)·sign is a plain mergeable integer sum, E[X²] = F₂.  The
+    mean estimate ships beside the EXACT F₂ = Σf² twin and their
+    ratio in ppm — the Bloom/KMV/HLL xengine discipline: the whole
+    estimator, its inputs, and its error are hash-attested.  F₂ is
+    the self-join size / skew functional (q_stats_skew_report's
+    denominator), which is why a one-pass mergeable sketch of it
+    matters at 100 TB.
+
+    Scale: the sign fan-out is a map-side explode over the
+    Heaps-bounded term census (8 ints of state per copy TOTAL —
+    that's the entire point of AMS); X² stays in int64 to ~3e9
+    corpus tokens, past which the DECIMAL string-pin applies."""
+    d = T(spark, sf_dir, "documents")
+    c = (
+        d.select(F.explode(F.split("text", " ")).alias("term"))
+        .where(F.col("term") != "")
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("f"))
+    )
+    signs = c.select(
+        "term",
+        "f",
+        F.explode(F.expr(f"sequence(0L, {_AMS_COPIES - 1}L)")).alias("seed"),
+    ).select(
+        "f",
+        "seed",
+        F.expr(
+            f"CASE WHEN {_AMS_HASH_SPARK} % 2 = 0 THEN 1 ELSE -1 END"
+        ).alias("sgn"),
+    )
+    sk = signs.groupBy("seed").agg(
+        F.sum(F.expr("f * sgn")).cast("long").alias("x")
+    )
+    est = sk.agg(
+        F.expr(f"CAST(SUM(x * x) DIV {_AMS_COPIES} AS BIGINT)").alias(
+            "est_mean"
+        ),
+        F.min(F.expr("x * x")).cast("long").alias("est_min"),
+        F.max(F.expr("x * x")).cast("long").alias("est_max"),
+    )
+    exact = c.agg(
+        F.count(F.lit(1)).cast("long").alias("n_terms"),
+        F.sum(F.expr("f * f")).cast("long").alias("f2_exact"),
+    )
+    return exact.crossJoin(est).select(
+        "n_terms",
+        "f2_exact",
+        "est_mean",
+        "est_min",
+        "est_max",
+        F.expr(
+            "CAST(CASE WHEN f2_exact = 0 THEN NULL"
+            " ELSE (1000000 * est_mean) DIV f2_exact END AS BIGINT)"
+        ).alias("ratio_ppm"),
     )

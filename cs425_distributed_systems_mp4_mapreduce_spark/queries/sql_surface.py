@@ -109,7 +109,7 @@ def q_udtf_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the recursion enumerates days from the stream's min to max and
 #: left-joins per-day counts (zero-filled), i.e. the gap-fill spine
 #: built by RECURSION instead of sequence() explode
-#: (queries/analytics_ext.q_timeseries_gapfill is the generator twin).
+#: (queries/windows.q_timeseries_gapfill is the generator twin).
 #: DAILY deliberately: each recursion level is a sequential driver
 #: round trip in Spark, so depth is the cost driver — ~30 day steps,
 #: not ~720 hour steps (measured ~100× slower); for dense spines the

@@ -188,3 +188,160 @@ def q_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("o_orderpriority")
     )
+
+
+# ------------------------------------------------------------------
+# Bit-pack width analysis (the 4th storage-encoding query)
+# ------------------------------------------------------------------
+
+_BITPACK_BLOCK = 16  # orderkeys per block (key-range blocks)
+
+
+_BITPACK_ORACLE = f"""
+WITH v AS (
+  SELECT 'l_quantity' AS col, l_orderkey // {_BITPACK_BLOCK} AS block,
+         CAST(l_quantity AS BIGINT) AS q FROM lineitem
+  UNION ALL
+  SELECT 'l_extendedprice_cents', l_orderkey // {_BITPACK_BLOCK},
+         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) FROM lineitem
+  UNION ALL
+  SELECT 'l_discount_cents', l_orderkey // {_BITPACK_BLOCK},
+         CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) FROM lineitem
+  UNION ALL
+  SELECT 'l_partkey', l_orderkey // {_BITPACK_BLOCK},
+         CAST(l_partkey AS BIGINT) FROM lineitem),
+blocks AS (
+  SELECT col, block, COUNT(*) AS n, MIN(q) AS lo, MAX(q) AS hi FROM v
+  GROUP BY col, block),
+widths AS (
+  SELECT col, block, n,
+         CAST(list_sum(list_transform(range(0, 40),
+              k -> IF(hi - lo >= (1::BIGINT << k), 1, 0))) AS BIGINT)
+           AS width
+  FROM blocks)
+SELECT col, width,
+       CAST(COUNT(*) AS BIGINT) AS n_blocks,
+       CAST(SUM(n) AS BIGINT) AS n_values,
+       CAST(SUM((n * width + 7) // 8 + 8) AS BIGINT) AS packed_bytes,
+       CAST(SUM(n * 8) AS BIGINT) AS plain_bytes
+FROM widths GROUP BY col, width ORDER BY col, width
+"""
+
+
+@query("q_encode_bitpack", oracle=_BITPACK_ORACLE)
+def q_encode_bitpack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bit-packing width analysis — the fourth storage-encoding probe
+    (beside dict/RLE/delta): per key-range block of lineitem rows and
+    per CANDIDATE COLUMN (quantity, price cents, discount cents,
+    partkey — the real decision is per column), the frame-of-reference
+    width bitlen(max − min) and the packed
+    size (n·width bits + an 8-byte reference) versus plain int64 —
+    the measurement behind parquet's BIT_PACKED/FOR encodings.
+    Blocks derive from the KEY RANGE (l_orderkey DIV {_BITPACK_BLOCK}),
+    not physical row position, so the census is layout-independent
+    and deterministic; width uses the integer indicator-sum bitlen.
+
+    Scale: one map-side-combined agg to per-block (min, max, n), one
+    tiny census over widths — no sort, no window."""
+    li = T(spark, sf_dir, "lineitem")
+    block = F.expr(f"l_orderkey DIV {_BITPACK_BLOCK}").alias("block")
+    cols = [
+        ("l_quantity", "CAST(l_quantity AS BIGINT)"),
+        ("l_extendedprice_cents", "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"),
+        ("l_discount_cents", "CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)"),
+        ("l_partkey", "CAST(l_partkey AS BIGINT)"),
+    ]
+    parts = [
+        li.select(F.lit(name).alias("col"), block, F.expr(expr).alias("q"))
+        for name, expr in cols
+    ]
+    v = parts[0]
+    for pdf in parts[1:]:
+        v = v.unionByName(pdf)
+    blocks = v.groupBy("col", "block").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("q").alias("lo"),
+        F.max("q").alias("hi"),
+    )
+    widths = blocks.select(
+        "col",
+        "n",
+        F.expr(
+            "CAST(aggregate(sequence(0, 39), 0L,"
+            " (acc, k) -> acc + IF(hi - lo >= shiftleft(1L, k), 1L, 0L))"
+            " AS BIGINT)"
+        ).alias("width"),
+    )
+    return (
+        widths.groupBy("col", "width")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_blocks"),
+            F.sum("n").cast("long").alias("n_values"),
+            F.sum(F.expr("(n * width + 7) DIV 8 + 8")).cast("long").alias("packed_bytes"),
+            F.sum(F.expr("n * 8")).cast("long").alias("plain_bytes"),
+        )
+        .orderBy("col", "width")
+    )
+
+
+# ------------------------------------------------------------------
+# Varint (LEB128) byte census (storage planning)
+# ------------------------------------------------------------------
+
+_VARINT_LADDER = " ".join(
+    f"WHEN v < {1 << (7 * b)} THEN {b}" for b in range(1, 9)
+)
+
+
+_VARINT_ORACLE = f"""
+WITH vals AS (
+  SELECT 'o_orderkey' AS col, CAST(o_orderkey AS BIGINT) AS v FROM orders
+  UNION ALL
+  SELECT 'o_custkey', CAST(o_custkey AS BIGINT) FROM orders
+  UNION ALL
+  SELECT 'total_cents', CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
+  FROM orders),
+b AS (
+  SELECT col, CASE {_VARINT_LADDER} ELSE 9 END AS nb FROM vals)
+SELECT col,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(nb) AS BIGINT) AS varint_bytes,
+       CAST(COUNT(*) * 8 AS BIGINT) AS fixed_bytes,
+       CAST((COUNT(*) * 8 - SUM(nb)) * 1000000 // (COUNT(*) * 8)
+            AS BIGINT) AS savings_ppm
+FROM b GROUP BY col ORDER BY col
+"""
+
+
+@query("q_encode_varint", oracle=_VARINT_ORACLE)
+def q_encode_varint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Varint/LEB128 byte census per column — the fifth
+    storage-encoding probe (delta/dict/RLE/bitpack are in-repo): how
+    many bytes each value needs at 7 payload bits per byte, as a pure
+    integer threshold ladder (no log), plus the savings vs fixed
+    int64 in ppm.  The planning census a columnar writer consults
+    before picking an encoding.
+
+    Scale: map-only ladder + one 3-group census; the three columns
+    stack through one scan."""
+    o = T(spark, sf_dir, "orders")
+    vals = o.selectExpr(
+        "stack(3, 'o_orderkey', CAST(o_orderkey AS BIGINT),"
+        " 'o_custkey', CAST(o_custkey AS BIGINT),"
+        " 'total_cents', CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))"
+        " AS (col, v)"
+    )
+    return (
+        vals.select("col", F.expr(f"CASE {_VARINT_LADDER} ELSE 9 END").alias("nb"))
+        .groupBy("col")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("nb").cast("long").alias("varint_bytes"),
+            (F.count(F.lit(1)) * 8).cast("long").alias("fixed_bytes"),
+            F.expr(
+                "CAST((COUNT(1) * 8 - SUM(nb)) * 1000000"
+                " DIV (COUNT(1) * 8) AS BIGINT)"
+            ).alias("savings_ppm"),
+        )
+        .orderBy("col")
+    )

@@ -2,8 +2,8 @@
 Q19/Q20/Q21/Q22 adapted to the driver testdata schema (no partsupp /
 l_shipmode / l_commitdate / c_phone columns — substitutions documented
 per query; lineitem serves as the part↔supplier bridge where the spec
-uses partsupp).  With Q1≈q_agg_pricing, Q3-Q6 in extras.py, and this
-module, every one of the 22 TPC-H query shapes has an adapted,
+uses partsupp).  With Q1≈q_agg_pricing and Q3-Q6 (at the end of this
+module), every one of the 22 TPC-H query shapes has an adapted,
 fully-oracled form in the registry.
 
 These widen the relational surface beyond the reference's own SQL
@@ -906,4 +906,163 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_name")
         .agg(F.count_distinct("l_orderkey").alias("numwait"))
         .orderBy(F.desc("numwait"), "s_name")
+    )
+
+
+@query(
+    "q_tpch_q3",
+    oracle="""
+    SELECT l_orderkey, {rev}, CAST(epoch(o_orderdate) AS BIGINT) AS orderdate_s, o_orderpriority
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+      AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
+    GROUP BY l_orderkey, orderdate_s, o_orderpriority
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+    """.format(rev=o_dsum("l_extendedprice * (1 - l_discount)", "revenue")),
+)
+def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3 (shipping priority) adapted to this schema: selective
+    dim filter → two shuffled joins → grouped revenue → top-10.  The
+    unique l_orderkey tiebreak makes the LIMIT deterministic.  Scale
+    shape: the segment filter pushes into the customer scan, both date
+    filters push into their scans, and the top-10 is
+    TakeOrderedAndProject — no global sort."""
+    c = T(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = T(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
+    )
+    li = T(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp")
+    )
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .groupBy("l_orderkey", F.col("o_orderdate").cast("timestamp").cast("long").alias("orderdate_s"), "o_orderpriority")
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
+        .limit(10)
+        .select("l_orderkey", "revenue", "orderdate_s", "o_orderpriority")
+    )
+
+
+@query(
+    "q_tpch_q4",
+    oracle="""
+    SELECT o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
+      AND EXISTS (
+        SELECT 1 FROM lineitem
+        WHERE l_orderkey = o_orderkey
+          AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+    GROUP BY o_orderpriority
+    ORDER BY o_orderpriority
+    """,
+)
+def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 (order priority checking) shape: EXISTS-correlated
+    subquery with a non-equi time condition — Catalyst rewrites it to a
+    LEFT SEMI join on l_orderkey with the date predicate as join
+    condition, so the lineitem side never materializes per-order
+    results.  Late-shipping definition adapted to this schema
+    (l_shipdate > o_orderdate + 60 days)."""
+    o = T(spark, sf_dir, "orders")
+    li = T(spark, sf_dir, "lineitem")
+    late = o.filter(
+        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    ).join(
+        li,
+        (F.col("l_orderkey") == F.col("o_orderkey"))
+        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
+        "semi",
+    )
+    return (
+        late.groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count"))
+        .orderBy("o_orderpriority")
+    )
+
+
+@query(
+    "q_tpch_q5",
+    oracle="""
+    SELECT n_name, {rev}
+    FROM customer
+    JOIN orders   ON c_custkey  = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey  = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation   ON s_nationkey = n_nationkey
+    JOIN region   ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY n_name ORDER BY revenue DESC, n_name
+    """.format(rev=o_dsum("l_extendedprice * (1 - l_discount)", "revenue")),
+)
+def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5 (local supplier volume) adapted to this schema: a
+    6-table snowflake with the EXTRA c_nationkey = s_nationkey equality
+    ('local' supplier) that makes join ORDER matter.  Scale shape:
+    region→nation is a broadcast chain pruning supplier before the big
+    fact joins; the date filter pushes into the orders scan; revenue
+    aggregates with map-side partials on the small n_name key."""
+    c = T(spark, sf_dir, "customer")
+    o = T(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    )
+    li = T(spark, sf_dir, "lineitem")
+    s = T(spark, sf_dir, "supplier")
+    n = T(spark, sf_dir, "nation")
+    r = T(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .join(
+            s,
+            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+        )
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("n_name")
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .orderBy(F.desc("revenue"), F.asc("n_name"))
+    )
+
+
+@query(
+    "q_tpch_q6",
+    oracle="""
+    SELECT {rev}, COUNT(*) AS n_items
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24
+    """.format(rev=o_dsum("l_extendedprice * l_discount", "revenue")),
+)
+def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q6 (forecast revenue change): the canonical scan-filter-
+    aggregate.  Every predicate (date range, discount band, quantity
+    cap) pushes into the parquet scan as PushedFilters; the single
+    global sum is a two-stage partial/final with ONE row crossing the
+    shuffle — at 100 TB this query is pure scan bandwidth."""
+    li = T(spark, sf_dir, "lineitem")
+    return (
+        li.filter(
+            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+            & F.col("l_discount").between(0.05, 0.07)
+            & (F.col("l_quantity") < 24)
+        )
+        .agg(
+            dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
     )

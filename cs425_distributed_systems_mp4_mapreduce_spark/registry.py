@@ -29,7 +29,6 @@ class QuerySpec:
     atol: float = 0.0
     #: included in bench.py's headline set
     headline: bool = False
-    tags: tuple = ()
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -40,14 +39,13 @@ def query(
     oracle: Optional[str] = None,
     atol: float = 0.0,
     headline: bool = False,
-    tags: tuple = (),
 ):
     """Decorator registering a query implementation."""
 
     def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, atol, headline, tuple(tags))
+        REGISTRY[name] = QuerySpec(name, fn, oracle, atol, headline)
         return fn
 
     return deco

@@ -112,7 +112,7 @@ def _track_transitions(key, batches: Iterator[pd.DataFrame], state: GroupState):
 
 def transition_stream(events: DataFrame) -> DataFrame:
     """Streaming event-type transition pairs (batch twin:
-    queries/analytics_r4.q_events_transitions — stream==batch asserted
+    queries/events.q_events_transitions — stream==batch asserted
     in tests/test_streaming.py).  Each transition is emitted exactly
     once, in the micro-batch that completes the pair."""
     return events.groupBy("user_id").applyInPandasWithState(
@@ -136,7 +136,7 @@ SEQUENCE_STATE = (
 
 def _track_sequences(key, batches: Iterator[pd.DataFrame], state: GroupState):
     """Per-user order-3 sequence emitter — the streaming form of the
-    double-LEAD chain in queries/analytics_r7b.q_events_sequences:
+    double-LEAD chain in queries/events.q_events_sequences:
     remembers the last TWO events across micro-batches and emits one
     'a>b>c' row per event that has two predecessors.  Same ordering
     and eviction contract as :func:`_track_transitions`; state is two
@@ -169,7 +169,7 @@ def _track_sequences(key, batches: Iterator[pd.DataFrame], state: GroupState):
 
 def sequence_stream(events: DataFrame) -> DataFrame:
     """Streaming order-3 event sequences (batch twin:
-    queries/analytics_r7b.q_events_sequences without the top-20 cut —
+    queries/events.q_events_sequences without the top-20 cut —
     stream==batch asserted in tests/test_streaming.py).  Each
     sequence is emitted exactly once, in the micro-batch its third
     event arrives."""
@@ -197,7 +197,7 @@ CUSUM_OUTPUT = "user_id long, us long, cusum_cents long, alarm long"
 #: micro-batches (the OHLC "bounded state per key" discipline).
 CUSUM_STATE = "pref long, runmin long"
 
-#: must equal queries/analytics_r8's _CUSUM_K/_CUSUM_H (imported there
+#: must equal queries/windows' _CUSUM_K/_CUSUM_H (imported there
 #: lazily to avoid a package cycle; equality asserted in
 #: tests/test_streaming.py)
 CUSUM_K = 6000
@@ -252,7 +252,7 @@ def _track_cusum(key, batches: Iterator[pd.DataFrame], state: GroupState):
 
 def cusum_stream(events: DataFrame) -> DataFrame:
     """Streaming CUSUM changepoint detector (batch twin:
-    queries/analytics_r8.q_window_cusum, fully DuckDB-oracled;
+    queries/windows.q_window_cusum, fully DuckDB-oracled;
     stream==batch asserted in tests/test_streaming.py).  State is two
     longs per user regardless of event volume, evicted on idle
     timeout — bounded state on an unbounded stream, the property that
@@ -280,7 +280,7 @@ GAP_STATE = "tus long, eid long"
 def _track_gaps(key, batches: Iterator[pd.DataFrame], state: GroupState):
     """Per-user inter-arrival gap emitter — the streaming form of
     tus − LAG(tus) OVER (PARTITION BY user ORDER BY tus, event_id)
-    (batch twin: queries/analytics_r9e.q_events_interarrival's gap
+    (batch twin: queries/events.q_events_interarrival's gap
     stage).  Rows sort by (µs, event_id) inside each micro-batch —
     the batch window's exact key; gap values depend only on the
     sorted µs multiset, so tie order never changes a gap.  State is
@@ -332,7 +332,7 @@ EWMA_OUTPUT = "user_id long, event_id long, ewma_micros long"
 #: (the 8th slot is the in-flight current value).
 EWMA_STATE = ", ".join(f"v{j} double" for j in range(1, 8))
 
-#: must equal queries/analytics_r7b._EWMA_DEPTH (asserted in
+#: must equal queries/windows._EWMA_DEPTH (asserted in
 #: tests/test_streaming.py — no import here to avoid a package cycle)
 EWMA_DEPTH = 8
 
@@ -406,7 +406,7 @@ PH_STATE = (
     " cur_cnt long, seq long"
 )
 
-#: must equal queries/analytics_r9s's _PH_US_PER_DAY /
+#: must equal queries/stats' _PH_US_PER_DAY /
 #: _PH_LAMBDA_MICROS (pinned copies, no import cycle; equality
 #: asserted in tests/test_streaming.py — the cusum_stream precedent)
 PH_US_PER_DAY = 86_400_000_000

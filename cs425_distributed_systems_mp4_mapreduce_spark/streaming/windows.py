@@ -265,7 +265,7 @@ def ohlc_stream(
     events: DataFrame, window: str = "1 hour", watermark: str = "10 minutes"
 ) -> DataFrame:
     """Streaming OHLC bars — the incremental form of
-    queries/analytics_r4.q_timeseries_ohlc: per (event_type, hour
+    queries/windows.q_timeseries_ohlc: per (event_type, hour
     window) first/max/min/last value, first/last resolved by
     min_by/max_by over the (ts, event_id) total order, which are
     incrementally maintainable aggregates (each holds ONE candidate

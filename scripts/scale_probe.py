@@ -537,7 +537,7 @@ def _semdedup_wall(spark) -> dict:
 
     from pyspark.sql import functions as F
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
 
@@ -1174,7 +1174,7 @@ def _w100_semdedup(spark, cells: int, note: str) -> dict:
     confirmation of the C ∝ √N cell-count rule at 2M vectors — still
     under the 2000-id anchor bound, so the discipline itself is
     runnable here."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
 
@@ -1310,7 +1310,7 @@ def _w100_auto_semdedup(spark) -> dict:
     from cs425_distributed_systems_mp4_mapreduce_spark.operators.dedup import (
         derive_scale_params,
     )
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
 

@@ -30,10 +30,6 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 SF_T2 = os.environ.get("SPARK_GRAFT_T2_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> None:
@@ -47,6 +43,9 @@ def main() -> None:
     from cs425_distributed_systems_mp4_mapreduce_spark.session import (
         get_spark,
     )
+    from cs425_distributed_systems_mp4_mapreduce_spark.sources.tables import (
+        TABLE_NAMES,
+    )
 
     spark = get_spark(
         "t2_sweep",
@@ -54,7 +53,7 @@ def main() -> None:
         shuffle_partitions=8,
     )
     con = duckdb.connect()
-    for name in TABLES:
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM"
             f" read_parquet('{SF_T2}/{name}.parquet')"

@@ -8,6 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cs425_distributed_systems_mp4_mapreduce_spark.session import get_spark
+from cs425_distributed_systems_mp4_mapreduce_spark.sources.tables import TABLE_NAMES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
@@ -55,10 +56,7 @@ def duck():
     import duckdb
 
     con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_T2}/{name}.parquet')"
         )

@@ -9,11 +9,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7b import (
-    _PPS_STEP,
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_sequences,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     q_knn_graph,
     q_multimodal_audio_windows,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.pipeline_ops import (
+    _PPS_STEP,
     q_sample_systematic,
     q_validate_constraints,
 )
@@ -224,7 +228,7 @@ def test_soundex_twin_on_census_edge_suite(spark):
     corpus vocabulary the parity row covers."""
     import duckdb
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7b import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
         _SX_COLLAPSE_SQL,
         _SX_MAP,
     )

@@ -14,14 +14,16 @@ import math
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7b import (
-    q_join_pointintime,
-    q_sample_systematic,
-    q_scd2_history,
-)
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7c import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_deciles_twopass,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.pipeline_ops import (
+    q_sample_systematic,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.relational import (
     q_interval_concurrency,
+    q_join_pointintime,
+    q_scd2_history,
 )
 
 

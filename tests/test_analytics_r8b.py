@@ -8,14 +8,14 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     _C,
     _DIM,
     _T2_DEN,
     _T2_NUM,
     q_dedup_semantic,
 )
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8c import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.relational import (
     q_join_pit_tolerance,
 )
 
@@ -95,7 +95,7 @@ def test_dedup_semantic_cell_cap_invariant(spark, tmp_path):
     8 anchors), so cell 0 holds ~41 vectors and cap=8 forces s >= 5
     with cross-bucket, diagonal, and keeper/dup-swap group shapes all
     exercised."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
 
@@ -188,7 +188,7 @@ def test_semdedup_derived_cells_default(spark):
     caller path."""
     import math
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.sources.tables import table

@@ -11,15 +11,17 @@ from __future__ import annotations
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8b import (
+from cs425_distributed_systems_mp4_mapreduce_spark.operators.sampling import (
+    KNUTH as _KNUTH,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.pipeline_ops import (
+    _MIX_B,
+    q_mix_temperature,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.sketches import (
     _KMV_K,
     q_sketch_bloom_xengine,
     q_sketch_kmv_xengine,
-)
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8c import (
-    _KNUTH,
-    _MIX_B,
-    q_mix_temperature,
 )
 
 
@@ -34,7 +36,7 @@ def test_twopass_rank_equals_global_rank(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.operators.skew import (
         twopass_rank,
     )
 
@@ -63,8 +65,8 @@ def test_ntile_closed_form_matches_ntile(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9 import (
-        _ntile_expr,
+    from cs425_distributed_systems_mp4_mapreduce_spark.operators.skew import (
+        ntile_expr as _ntile_expr,
     )
 
     for n in (1, 3, 4, 5, 6, 9, 10, 11, 47, 100):

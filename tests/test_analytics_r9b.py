@@ -17,7 +17,7 @@ def test_skyline_ties_and_duplicates(spark, tmp_path):
     """Same-price ties (only the max-size row(s) survive), duplicate
     (price, size) points (ALL kept — an identical twin does not
     dominate), and a strictly-dominated interior point."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9b import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
         q_skyline_pareto,
     )
 
@@ -57,7 +57,7 @@ def test_skyline_ties_and_duplicates(spark, tmp_path):
 
 def test_streak_plateau_breaks_run(spark, tmp_path):
     """Equal-revenue days must BREAK a strictly-increasing streak."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9c import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
         q_window_streak,
     )
 
@@ -80,7 +80,7 @@ def test_streak_plateau_breaks_run(spark, tmp_path):
 
 def test_varint_ladder_boundaries(spark, tmp_path):
     """Byte counts at the exact 7-bit group boundaries."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9d import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.storage_ops import (
         q_encode_varint,
     )
 
@@ -107,7 +107,7 @@ def test_varint_ladder_boundaries(spark, tmp_path):
 def test_runs_test_alternating_and_trending(spark, tmp_path):
     """A strictly alternating series maximizes runs; the counts and
     the rational expected-runs must replay exactly."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9d import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
         q_stats_runs,
     )
 
@@ -133,7 +133,7 @@ def test_runs_test_alternating_and_trending(spark, tmp_path):
 def test_boilerplate_census_counts_distinct_docs(spark, tmp_path):
     """A shingle repeated WITHIN one doc counts that doc once; the
     floor drops shingles under 3 distinct docs."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9d import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
         q_text_boilerplate,
     )
 
@@ -162,7 +162,7 @@ def test_boilerplate_census_counts_distinct_docs(spark, tmp_path):
 def test_time_weighted_average_known_trajectory(spark, tmp_path):
     """Two holding segments with known durations: TWA must weight by
     interval, not count."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9b import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
         q_agg_time_weighted,
     )
 
@@ -190,7 +190,7 @@ def test_time_weighted_average_known_trajectory(spark, tmp_path):
 
 def test_drawdown_known_trajectory(spark, tmp_path):
     """Centered trajectory with a hand-computed worst drawdown."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9b import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
         q_window_drawdown,
     )
 

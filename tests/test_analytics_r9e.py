@@ -12,12 +12,18 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9e import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_interarrival,
     q_events_stickiness,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     q_sim_knn_classify,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_chisq_dow,
     q_stats_mannwhitney,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_vwap,
 )
 

@@ -10,11 +10,15 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9f import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_hhi,
     q_agg_trimmed_mean,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_ngram_novelty,
     q_text_zipf,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_bollinger,
     q_window_rsi,
 )

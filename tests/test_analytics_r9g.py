@@ -9,11 +9,19 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9g import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_absdev,
-    q_mix_upsample_plan,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_orders_reorder_gap,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.pipeline_ops import (
+    q_mix_upsample_plan,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_keywords,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_pct_change,
 )
 

@@ -10,11 +10,17 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9h import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_winsorized_mean,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_heatmap,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_spearman,
     q_stats_two_proportion,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_forecast_naive,
 )
 

@@ -10,10 +10,16 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9i import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_cohort_ltv,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.graph import (
     q_graph_degree_census,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.relational import (
     q_join_band,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_cramers_v,
     q_stats_kendall,
     q_stats_kruskal,

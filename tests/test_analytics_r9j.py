@@ -10,11 +10,15 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9j import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_pareto_coverage,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_customer_migration,
     q_events_bounce,
     q_rules_association,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_brown_forsythe,
 )
 

@@ -10,12 +10,20 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9k import (
-    q_dedup_rate_by_source,
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_trigrams,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
+    q_dedup_rate_by_source,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_anova,
     q_stats_cohens_d,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_fano,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_macd,
 )
 

@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9l import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.graph import (
     q_graph_kcore_peel,
     q_graph_powerlaw_slope,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.pipeline_ops import (
     q_validate_fk,
 )
 

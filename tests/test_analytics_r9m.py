@@ -9,9 +9,11 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9m import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_survival,
     q_orders_abc,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_theilsen,
 )
 

@@ -9,9 +9,13 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9n import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_lineitem_returns,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     q_sim_recall_quantized,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_vocab_coverage,
 )
 

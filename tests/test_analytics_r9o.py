@@ -13,7 +13,7 @@ import math
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9o import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_cochran_q,
     q_stats_jarque_bera,
     q_stats_ljung_box,

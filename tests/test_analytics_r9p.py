@@ -9,7 +9,7 @@ import datetime as dt
 
 import pandas as pd
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9p import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_timeseries_fold_periodicity,
     q_timeseries_mase,
     q_window_aroon,

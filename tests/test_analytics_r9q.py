@@ -9,8 +9,10 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9q import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     q_dedup_minhash_error,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_readability,
     q_text_sentence_stats,
     q_text_vocab_overlap,

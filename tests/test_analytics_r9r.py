@@ -8,10 +8,12 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9r import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.graph import (
     q_graph_assortativity,
     q_graph_clustering_coeff,
     q_graph_reciprocity,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.sketches import (
     q_sketch_ams_f2,
 )
 

@@ -10,9 +10,13 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9s import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
     q_sim_mmr,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_page_hinkley,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_atr,
 )
 

@@ -11,7 +11,7 @@ import math
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9t import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_cvm,
     q_stats_friedman,
     q_stats_grubbs,

@@ -12,9 +12,13 @@ import math
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9u import (
-    q_embed_dim_outliers,
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_markov_power,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
+    q_embed_dim_outliers,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_binom_ci,
 )
 

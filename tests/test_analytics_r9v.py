@@ -11,8 +11,10 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9v import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.scalars import (
     q_scalar_url,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_fmax,
     q_stats_sign_test,
 )

@@ -11,9 +11,13 @@ import math
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9w import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
     q_events_type_affinity,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_poisson_dispersion,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
     q_window_ulcer_index,
 )
 

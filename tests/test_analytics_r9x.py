@@ -10,9 +10,13 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9x import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.aggregates import (
     q_agg_bowley_skew,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.relational import (
     q_join_asof_nearest,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_runs_updown,
 )
 

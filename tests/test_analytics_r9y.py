@@ -9,9 +9,11 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9y import (
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
     q_stats_kappa,
     q_stats_mcnemar,
+)
+from cs425_distributed_systems_mp4_mapreduce_spark.queries.text import (
     q_text_heaps_curve,
 )
 

@@ -138,7 +138,7 @@ def test_interval_join_candidate_volume_near_linear(spark):
     the LSH families."""
     import pyspark.sql.functions as F
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r4 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.relational import (
         PAIR_GAP_US,
         interval_candidates,
     )
@@ -222,8 +222,8 @@ def test_fastss_candidate_volume_near_linear(spark):
     reproducible."""
     from pyspark.sql import functions as F
 
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.extras import (
-        _DELETION_VARIANTS,
+    from cs425_distributed_systems_mp4_mapreduce_spark.functions.text import (
+        DELETION_VARIANTS as _DELETION_VARIANTS,
     )
 
     def words(n):

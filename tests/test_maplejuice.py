@@ -64,8 +64,11 @@ def test_reduce_by_key_agrees_with_juice(spark):
     lines = _doc_lines(spark)
     pairs = maple(lines, _tok(), 4)
     j = dict(juice(pairs, lambda k, vs: (k, sum(vs)), 4, "hash").collect())
-    rb = dict(reduce_by_key(pairs, lambda a, b: a + b, 4, "hash").collect())
-    assert j == rb
+    for partitioner in ("hash", "range"):
+        rb = dict(reduce_by_key(pairs, lambda a, b: a + b, 4, partitioner).collect())
+        assert j == rb, partitioner
+    with pytest.raises(ValueError, match="unknown partitioner 'bogus'"):
+        reduce_by_key(pairs, lambda a, b: a + b, 4, "bogus")
 
 
 def test_partitioner_completeness_and_task_counts(spark):

@@ -7,9 +7,9 @@ the committed artifact to the live registry so a new query cannot land
 without being re-audited, and pin the audit verdict to zero violations
 — the same contract test_docs_counts.py enforces for doc claims.
 
-The audit itself is NOT re-run here (it needs ~1 min of Spark planning
-across 169 queries; the per-query plan *properties* that matter most
-are independently pinned live in tests/test_plans.py).
+The audit itself is NOT re-run here (it needs minutes of Spark planning
+across the whole registry; the per-query plan *properties* that matter
+most are independently pinned live in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ def test_audit_all_plans_captured(audit):
 
 def test_no_row_python_eval_anywhere(audit):
     """The registry-wide form of SURVEY §4's 'UDFs are the slow path':
-    zero row-at-a-time Python operators in ANY of the 169 plans (Arrow
+    zero row-at-a-time Python operators in ANY registered plan (Arrow
     batch operators are allowed and merely counted)."""
     offenders = {
         n: r for n, r in audit["queries"].items()

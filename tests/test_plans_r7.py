@@ -17,10 +17,10 @@ def test_snapshot_asof_read_prunes_versions(spark):
     # build the snapshot layout, then explain an as-of read directly:
     # the v=0 filter must land in PartitionFilters (one version's dirs
     # scanned, regardless of version count)
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.sinks import (
         q_source_snapshot,
+        sink_path,
     )
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.sinks import sink_path
 
     q_source_snapshot(spark, SF_T2)  # materializes the versioned dirs
     snap = spark.read.parquet(sink_path(SF_T2, "orders_snapshots"))

@@ -697,7 +697,7 @@ def test_cusum_stream_equals_batch(spark, tmp_path):
     q_window_cusum exactly — VERDICT r8 task 5, the OHLC
     incrementality precedent applied to the prefix-sum − running-min
     closed form."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r8 import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
         _CUSUM_H,
         _CUSUM_K,
     )
@@ -757,7 +757,7 @@ def test_interarrival_stream_equals_batch(spark, tmp_path):
     """The streamed per-user gap feed (one tuple of state per user),
     bucketed through the SAME log2 CASE ladder, must reproduce the
     fully-oracled q_events_interarrival census exactly."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9e import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.events import (
         _GAP_LADDER,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful import (
@@ -808,7 +808,7 @@ def test_ewma_stream_equals_batch(spark, tmp_path):
     ring buffer the q_window_ewma docstring promises) must reproduce
     the fully-oracled batch trajectory bit-for-bit: same dyadic
     stencil, same left-to-right IEEE summation, same floored micros."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r7b import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.windows import (
         _EWMA_DEPTH,
     )
     from cs425_distributed_systems_mp4_mapreduce_spark.streaming.stateful import (
@@ -855,7 +855,7 @@ def test_ph_stream_equals_batch(spark, tmp_path):
     cusum_stream discipline applied to the self-referencing-mean
     detector (days close when a later day arrives; gap days fold in
     as x = 0; the open day re-emits provisionally)."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.queries.analytics_r9s import (
+    from cs425_distributed_systems_mp4_mapreduce_spark.queries.stats import (
         _PH_LAMBDA_MICROS,
         _PH_US_PER_DAY,
     )
