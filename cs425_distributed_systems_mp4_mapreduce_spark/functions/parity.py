@@ -35,7 +35,7 @@ the domain should aggregate doubles and ROUND(·,4) instead — the
 other sanctioned parity pattern.
 
 Two callers, two accumulators.  The oracle checks (the
-__spark_entry__.py contract, scripts/t2_sweep.py and
+__spark_entry__.py contract, the runner's t2 sweep and
 tests/test_parity.py) compare results against DuckDB bit for bit, so
 they need the exact decimal sums above.  bench.py compares wall time
 against the vanilla PySpark baseline (BASELINE.md), which sums

@@ -185,9 +185,11 @@ def q_dedup_allpairs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_pairs(d, jaccard_threshold=0.8, length_buckets=True)
 
 
-@query(
-    "q_dedup_clusters",
-    oracle="""
+#: brute-force Jaccard ≥ 0.5 shingle self-join plus recursive-CTE
+#: transitive closure: the oracle prefix of both clustering queries
+#: (q_dedup_clusters and q_dedup_clusters_star), which differ only in
+#: the final SELECT.
+_CLUSTER_REACH_CTE = """
     WITH RECURSIVE sh AS (
       SELECT doc_id,
              LIST_DISTINCT([ARRAY_TO_STRING(words[i:i+2], ' ')
@@ -206,7 +208,13 @@ def q_dedup_allpairs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION
       SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
     )
-    SELECT id AS doc_id, MIN(r) AS cluster_id,
+"""
+
+
+@query(
+    "q_dedup_clusters",
+    oracle=_CLUSTER_REACH_CTE
+    + """    SELECT id AS doc_id, MIN(r) AS cluster_id,
            MIN(r) = id AS is_representative
     FROM reach GROUP BY id ORDER BY doc_id
     """,
@@ -233,26 +241,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_clusters_star",
-    oracle="""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id,
-             LIST_DISTINCT([ARRAY_TO_STRING(words[i:i+2], ' ')
-                            FOR i IN RANGE(1, GREATEST(LEN(words) - 2, 1) + 1)]) AS s
-      FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS words FROM documents)
-    ), pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(LEN(LIST_INTERSECT(a.s, b.s)) AS BIGINT)
-            / CAST(LEN(LIST_DISTINCT(LIST_CONCAT(a.s, b.s))) AS BIGINT) >= 0.5
-    ), edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION ALL SELECT id_b, id_a FROM pairs
-    ), reach(id, r) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-    )
-    SELECT id AS doc_id, MIN(r) AS cluster_id
+    oracle=_CLUSTER_REACH_CTE
+    + """    SELECT id AS doc_id, MIN(r) AS cluster_id
     FROM reach GROUP BY id ORDER BY doc_id
     """,
 )
@@ -1489,7 +1479,9 @@ _BM25_TERMS = ("spark", "hash", "join")
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 
-_BM25_ORACLE = f"""
+#: the tok/stats/dl/dfreq/tf/scored CTEs shared by the BM25 and
+#: hybrid-RRF oracles: per-term BM25 scores floored to integer micros.
+_BM25_CTES = f"""
 WITH tok AS (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS word
              FROM documents),
 stats AS (SELECT COUNT(*) AS n_docs,
@@ -1512,7 +1504,9 @@ scored AS (
   FROM tf
   JOIN dfreq USING (word)
   JOIN dl USING (doc_id)
-  CROSS JOIN stats)
+  CROSS JOIN stats)"""
+
+_BM25_ORACLE = _BM25_CTES + """
 SELECT doc_id, CAST(SUM(term_score_micros) AS BIGINT) AS score_micros
 FROM scored
 GROUP BY doc_id
@@ -1591,30 +1585,7 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
     )
 
-_HYBRID_ORACLE = f"""
-WITH tok AS (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS word
-             FROM documents),
-stats AS (SELECT COUNT(*) AS n_docs,
-                 (SELECT COUNT(*) FROM tok) AS n_tokens
-          FROM documents),
-dl AS (SELECT doc_id, COUNT(*) AS dlen FROM tok GROUP BY doc_id),
-dfreq AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM tok
-          WHERE word IN {_BM25_TERMS!r} GROUP BY word),
-tf AS (SELECT doc_id, word, COUNT(*) AS tfv FROM tok
-       WHERE word IN {_BM25_TERMS!r} GROUP BY doc_id, word),
-scored AS (
-  SELECT tf.doc_id,
-         CAST(FLOOR(
-           LN(1.0 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-           * (tf.tfv * ({_BM25_K1} + 1.0))
-           / (tf.tfv + {_BM25_K1} * (1.0 - {_BM25_B}
-              + {_BM25_B} * dl.dlen
-                / (CAST(stats.n_tokens AS DOUBLE) / stats.n_docs)))
-           * 1000000.0) AS BIGINT) AS term_score_micros
-  FROM tf
-  JOIN dfreq USING (word)
-  JOIN dl USING (doc_id)
-  CROSS JOIN stats),
+_HYBRID_ORACLE = _BM25_CTES + """,
 lex AS (SELECT doc_id, CAST(SUM(term_score_micros) AS BIGINT) AS score_micros
         FROM scored GROUP BY doc_id
         ORDER BY score_micros DESC, doc_id LIMIT 20),

@@ -33,7 +33,7 @@ RUNTIME_CONF: dict[str, str] = {
     # Python UDTFs evaluate through Arrow batches instead of pickled
     # rows (plan shows ArrowEvalPythonUDTF, not BatchEvalPythonUDTF) —
     # same ~10-100x batching win as pandas UDFs; verified runtime-
-    # settable and parity-neutral (scripts/plan_audit.py gates that no
+    # settable and parity-neutral (the runner's audit gates that no
     # row-at-a-time Python eval remains anywhere in the registry).
     "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
     # Sized for the local[32] harness (~1 wave of post-shuffle tasks;

@@ -535,11 +535,10 @@ def _semdedup_wall(spark) -> dict:
     oracle."""
     import math
 
-    from pyspark.sql import functions as F
-
     from cs425_distributed_systems_mp4_mapreduce_spark.queries.llm_ops import (
         semdedup_frame,
     )
+    from cs425_distributed_systems_mp4_mapreduce_spark.runner import materialize
 
     out: dict = {}
     for sf_dir, scale in ((SRC, "sf0.1"), (DST, "sf1"), (DST10, "sf10")):
@@ -549,10 +548,7 @@ def _semdedup_wall(spark) -> dict:
         def run():
             df = semdedup_frame(spark, sf_dir, cells)
             t0 = time.perf_counter()
-            df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
-            ).collect()
+            materialize(df, collect=False)
             return time.perf_counter() - t0
 
         run()  # warm-up
@@ -795,26 +791,15 @@ def _candidate_curves(spark) -> dict:
 
 
 def _wall_scaling(spark, queries=None) -> dict:
-    from cs425_distributed_systems_mp4_mapreduce_spark.functions.parity import (
-        double_sums,
+    from cs425_distributed_systems_mp4_mapreduce_spark.runner import (
+        bench_fn,
+        materialize,
+        select,
     )
-    from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries
 
-    from pyspark.sql import functions as F
-
-    def checksum(df):
-        # protocol 2 (same as bench.py): a bare count() lets Catalyst
-        # prune result-only windows/projections — the checksum agg
-        # forces full evaluation of every output column
-        df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
-        ).collect()
-
-    qs = all_queries()
     out = {}
-    for name in queries or WALL_QUERIES:
-        fn = double_sums()(qs[name].fn)  # bench form, as bench.py times it
+    for name, spec in select(queries or WALL_QUERIES).items():
+        fn = bench_fn(spec)
         row = {}
         for sf_dir, scale in (
             (SRC, "sf0.1"),
@@ -822,11 +807,11 @@ def _wall_scaling(spark, queries=None) -> dict:
             (DST10, "sf10"),
         ):
             runs = N_RUNS if scale != "sf10" else 2
-            checksum(fn(spark, sf_dir))  # warm-up
+            materialize(fn(spark, sf_dir), collect=False)  # warm-up
             times = []
             for _ in range(runs):
                 t0 = time.perf_counter()
-                checksum(fn(spark, sf_dir))
+                materialize(fn(spark, sf_dir), collect=False)
                 times.append(time.perf_counter() - t0)
             row[scale] = round(statistics.median(times), 3)
         row["ratio_at_10x_rows"] = round(row["sf1"] / row["sf0.1"], 2)
@@ -1543,23 +1528,24 @@ def _gen_sf100_textcorpus() -> None:
 def _wall_third_decade(spark) -> dict:
     """sf100-equivalent wall times for the flat/relational subset —
     the third measured decade.  ratio_at_1000x is vs the sf0.1 median
-    already recorded in wall_scaling (same queries, same protocol)."""
-    from cs425_distributed_systems_mp4_mapreduce_spark.functions.parity import (
-        double_sums,
+    already recorded in wall_scaling (same queries, same protocol-2
+    checksum materializer)."""
+    from cs425_distributed_systems_mp4_mapreduce_spark.runner import (
+        bench_fn,
+        materialize,
+        select,
     )
-    from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries
 
     _gen_sf100()
     _gen_sf100_textcorpus()
-    qs = all_queries()
     out = {}
-    for name in WALL100_QUERIES:
-        fn = double_sums()(qs[name].fn)  # bench form, as bench.py times it
-        fn(spark, DST100).count()  # warm-up
+    for name, spec in select(WALL100_QUERIES).items():
+        fn = bench_fn(spec)
+        materialize(fn(spark, DST100), collect=False)  # warm-up
         times = []
         for _ in range(2):
             t0 = time.perf_counter()
-            fn(spark, DST100).count()
+            materialize(fn(spark, DST100), collect=False)
             times.append(time.perf_counter() - t0)
         out[name] = {"sf100": round(statistics.median(times), 3)}
         print(f"# wall100 {name}: {out[name]['sf100']}s", file=sys.stderr)

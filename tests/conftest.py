@@ -7,8 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cs425_distributed_systems_mp4_mapreduce_spark.runner import duck_connect
 from cs425_distributed_systems_mp4_mapreduce_spark.session import get_spark
-from cs425_distributed_systems_mp4_mapreduce_spark.sources.tables import TABLE_NAMES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_T2 = "/root/testdata/sf0.01"
@@ -53,12 +53,6 @@ def _no_leaked_streaming_state():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_T2}/{name}.parquet')"
-        )
+    con = duck_connect(SF_T2)
     yield con
     con.close()

@@ -13,69 +13,16 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 import pytest
 
 from cs425_distributed_systems_mp4_mapreduce_spark.registry import all_queries
+# the compare kernel lives in the runner; perfbench/oracle.py and
+# tests/test_overflow_census.py import it from this module
+from cs425_distributed_systems_mp4_mapreduce_spark.runner import assert_frames_match
 
 from conftest import SF_T2
 
 SPECS = list(all_queries().values())
-
-
-def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name and rows by all columns; normalize dtypes."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(df[c]) and not df[c].isna().any():
-            df[c] = df[c].astype("int64")
-        elif df[c].dtype == object:
-            df[c] = df[c].where(df[c].notna(), "\x00NULL").astype(str)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return df
-
-
-def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, atol: float):
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"row count: spark={len(spark_pdf)} duck={len(duck_pdf)}"
-    )
-    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
-        f"columns: spark={sorted(spark_pdf.columns)} duck={sorted(duck_pdf.columns)}"
-    )
-    # STRICT dtype parity pre-normalization: a width/resolution skew
-    # (int32 vs int64, ns vs µs timestamps, HUGEINT promotion) reads as
-    # a schema difference to a strict driver comparator even when the
-    # values match
-    for c in spark_pdf.columns:
-        assert str(spark_pdf[c].dtype) == str(duck_pdf[c].dtype), (
-            f"dtype of {c!r}: spark={spark_pdf[c].dtype} duck={duck_pdf[c].dtype}"
-        )
-    s = canonicalize(spark_pdf)
-    d = canonicalize(duck_pdf)
-    for c in s.columns:
-        sv, dv = s[c], d[c]
-        if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(dv):
-            a = sv.to_numpy(dtype="float64")
-            b = dv.to_numpy(dtype="float64")
-            both_nan = np.isnan(a) & np.isnan(b)
-            diff = np.abs(a - b)
-            diff[both_nan] = 0.0
-            maxdiff = float(np.nanmax(diff)) if len(diff) else 0.0
-            if atol == 0.0:
-                assert np.array_equal(
-                    a[~both_nan], b[~both_nan]
-                ), f"column {c!r} not bit-identical; max |diff| = {maxdiff:g}"
-            else:
-                assert maxdiff <= atol, f"column {c!r} max |diff| = {maxdiff:g} > atol={atol:g}"
-        else:
-            eq = sv.eq(dv) | (sv.isna() & dv.isna())
-            assert eq.all(), (
-                f"column {c!r} mismatch at rows {list(eq[~eq].index[:5])}:"
-                f" spark={sv[~eq].head(3).tolist()} duck={dv[~eq].head(3).tolist()}"
-            )
 
 
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])

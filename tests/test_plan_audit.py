@@ -1,8 +1,10 @@
 """Freshness + cleanliness gate for PLAN_AUDIT.json.
 
-scripts/plan_audit.py captures ``explain('formatted')`` for EVERY
-registered query and scans for 100 TB plan anti-patterns (row-at-a-time
-Python eval, unexpected nested-loop/cartesian joins).  These tests pin
+The runner's audit action (``python -m
+cs425_distributed_systems_mp4_mapreduce_spark.runner audit``) captures
+``explain('formatted')`` for EVERY registered query and scans for
+100 TB plan anti-patterns (row-at-a-time Python eval, unexpected
+nested-loop/cartesian joins).  These tests pin
 the committed artifact to the live registry so a new query cannot land
 without being re-audited, and pin the audit verdict to zero violations
 — the same contract test_docs_counts.py enforces for doc claims.
@@ -27,7 +29,7 @@ PATH = os.path.join(REPO, "PLAN_AUDIT.json")
 
 @pytest.fixture(scope="module")
 def audit():
-    assert os.path.exists(PATH), "run scripts/plan_audit.py"
+    assert os.path.exists(PATH), "run python -m cs425_distributed_systems_mp4_mapreduce_spark.runner audit"
     with open(PATH) as f:
         return json.load(f)
 
